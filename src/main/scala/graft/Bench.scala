@@ -151,6 +151,7 @@ object Bench {
     // cold stores were before round 15). Snapshot AFTER warmup: only
     // builds paid inside the timed loop land in the artifact.
     val pinsBefore = SessionCache.buildSecondsSnapshot
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = headline.zipWithIndex.map { case ((name, fn), idx) =>
       if (idx > 0 && idx % normSegSize == 0) {
         parSeg += parSentinel(); scanSeg += scanSentinel()
@@ -159,37 +160,17 @@ object Bench {
         sentinels += sentinelKernel(); scans += scanSentinel()
         pars += parSentinel()
       }
-      def rep(): Double = {
-        val t0 = System.nanoTime()
-        // noop write materializes every output row AND column; count()
-        // would let the optimizer prune the computed columns and time a
-        // bare row count instead of the operator.
-        try { fn(spark, sfDir).write.mode("overwrite").format("noop").save() }
-        catch { case _: Throwable => () }
-        (System.nanoTime() - t0) / 1e9
-      }
-      val times = (1 to reps).map(_ => rep())
-      // Adaptive third rep at ANY magnitude (round-9 finding: the
-      // previous `min < 2 s` gate let BOTH reps of an entry inflate
-      // past 2 s under external load — BENCH_r09 recorded 7.21 s for
-      // an entry that re-measured at 0.45 s on zero-diff code, and the
-      // stabilizer never fired, overstating the suite by 75%). When
-      // the two reps DISAGREE by >1.5x the min is suspect regardless
-      // of size: re-rep. Cost is bounded by the MIN rep, not the max —
-      // a genuine slow entry has agreeing reps and never re-runs; only
-      // load-divergent pairs pay one more rep.
-      val stabilized =
-        if (times.size == 2 && needsThirdRep(times)) times :+ rep()
-        else times
-      var best = stabilized.min
-      var extra = 0
-      while (extra < 2 && needsPriorRecheck(best, priorMins.get(name))) {
-        best = math.min(best, rep()); extra += 1
-      }
-      repsUsed(name) = stabilized.size + extra
-      if (extra > 0) rechecked += name
-      name -> best
-    }
+      // noop write materializes every output row AND column; count()
+      // would let the optimizer prune the computed columns and time a
+      // bare row count instead of the operator.
+      val t = timeEntry(name,
+        () => fn(spark, sfDir).write.mode("overwrite").format("noop").save(),
+        reps, priorMins.get(name))
+      repsUsed(name) = t.reps
+      if (t.rechecked) rechecked += name
+      if (t.failed) failed += name
+      t.best.map(name -> _)
+    }.flatten
     sentinels += sentinelKernel(); scans += scanSentinel()
     pars += parSentinel()
     parSeg += pars.last
@@ -203,8 +184,56 @@ object Bench {
     println(artifactLine(results, sentinels.toSeq, scans.toSeq, pars.toSeq,
       repsUsed.toMap, rechecked.toSet, reps, sfDir.split('/').last,
       cpus.toIntOption.getOrElse(32), storesBefore.size, coldStores,
-      parSeg.toSeq, scanSeg.toSeq, pins))
+      parSeg.toSeq, scanSeg.toSeq, pins, failed.toSeq))
     spark.stop()
+  }
+
+  /** One entry's timing: the best of its successful reps, how many reps
+    * ran, whether the cross-round stabilizer re-repped it, and whether
+    * any rep threw.
+    */
+  private[graft] final case class EntryTiming(best: Option[Double],
+      reps: Int, rechecked: Boolean, failed: Boolean)
+
+  /** Time `run` for `reps` reps plus the stabilizer's extra reps. A rep
+    * that throws is never a timing: it is left out, logged by `name`,
+    * and marks the entry failed; an entry with no successful rep has no
+    * time at all, so a failure can never lower the total.
+    */
+  private[graft] def timeEntry(name: String, run: () => Unit, reps: Int,
+      prior: Option[Double]): EntryTiming = {
+    var ran = 0
+    var failed = false
+    def rep(): Option[Double] = {
+      ran += 1
+      val t0 = System.nanoTime()
+      try { run(); Some((System.nanoTime() - t0) / 1e9) }
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"Bench: $name failed: $e")
+          failed = true
+          None
+      }
+    }
+    val times = (1 to reps).flatMap(_ => rep())
+    // Adaptive third rep at ANY magnitude (round-9 finding: the
+    // previous `min < 2 s` gate let BOTH reps of an entry inflate
+    // past 2 s under external load — BENCH_r09 recorded 7.21 s for
+    // an entry that re-measured at 0.45 s on zero-diff code, and the
+    // stabilizer never fired, overstating the suite by 75%). When
+    // the two reps DISAGREE by >1.5x the min is suspect regardless
+    // of size: re-rep. Cost is bounded by the MIN rep, not the max —
+    // a genuine slow entry has agreeing reps and never re-runs; only
+    // load-divergent pairs pay one more rep.
+    val stabilized =
+      if (times.size == 2 && needsThirdRep(times)) times ++ rep()
+      else times
+    var best = stabilized.minOption
+    var extra = 0
+    while (extra < 2 && best.exists(needsPriorRecheck(_, prior))) {
+      best = (best ++ rep()).minOption; extra += 1
+    }
+    EntryTiming(best, ran, extra > 0, failed)
   }
 
   /** Entries per normalization segment: small enough that a mid-run
@@ -281,7 +310,9 @@ object Bench {
     * build seconds — the in-memory analog of the cold-store field:
     * min-of-reps excludes a first-rep pin build from `value`, and
     * without this field that amortization was invisible, round-16
-    * What's-wrong #2).
+    * What's-wrong #2); `failed_n` and `failed` the entries with a rep
+    * that threw (names capped at 8) — their failed reps are not in
+    * `value`, and an entry that never succeeded is not in it at all.
     * Per-entry detail for routine third reps
     * is deliberately NOT recorded: the first cut did, and 110 of 141
     * entries paying a warm-up rep at sf0.01 blew the whole queries
@@ -341,12 +372,14 @@ object Bench {
       coldStores: Seq[String] = Nil,
       parSeg: Seq[Double] = Nil,
       scanSeg: Seq[Double] = Nil,
-      pins: Seq[(String, Double)] = Nil): String = {
+      pins: Seq[(String, Double)] = Nil,
+      failed: Seq[String] = Nil): String = {
     val total = results.map(_._2).sum
     // Cap-robust companion total (round-16; see [[normalizedTotal]]).
     // `results` is in EXECUTION order here (the caller times entries
     // sorted by name and never reorders), so entry i / normSegSize is
-    // its true segment.
+    // its true segment — up to one slot per entry left out because no
+    // rep of it succeeded.
     val norm = normalizedTotal(results.map(_._2), normSegSize, parSeg)
     // ALL boundaries, untruncated (review finding: a 32-cap would let
     // value_norm stop being reproducible from the artifact past ~512
@@ -406,8 +439,10 @@ object Bench {
     // name must not corrupt the one-line artifact.
     val coldStr = coldStores.take(8).map(jsonStr)
       .mkString("[", ",", "]")
+    val failedStr = failed.sorted.take(8).map(jsonStr).mkString("[", ",", "]")
     def suffix(dropped: Int, droppedSum: Double) =
       f"""},"dropped":$dropped,"dropped_sum":$droppedSum%.2f,""" +
+        s""""failed_n":${failed.size},"failed":$failedStr,""" +
         f""""value_norm":$norm%.3f,"par_seg":$parSegStr,""" +
         s""""scan_seg":$scanSegStr,""" +
         s""""sentinel":$sentinelStr,"scan_sentinel":$scanStr,""" +

@@ -53,7 +53,7 @@ object Warmup {
   }
 
   /** Stage 2: every entry once at a small sibling sf dir. Per-entry
-    * failures are counted and reported, never thrown — warm-up must not
+    * failures are reported by name, never thrown — warm-up must not
     * fail a run over a foreign directory layout.
     */
   private def fullSurfaceWarm(spark: SparkSession, sfDir: String): Unit = {
@@ -62,18 +62,20 @@ object Warmup {
       .map(n => new java.io.File(self.getParentFile, n))
       .find(f => f.isDirectory && f.getAbsolutePath != self.getAbsolutePath)
       .getOrElse(return)
-    var failed = 0
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
+    val failed = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       // noop write, NOT count(): count() lets the optimizer prune the
       // computed columns, so map-only entries (scrub, fingerprint,
       // quantize...) would warm a bare row count and their regex/hash
       // codegen would still compile cold inside the first TIMED entry —
       // the same materialization-honesty rule Bench.scala documents.
-      try fn(spark, small.getAbsolutePath)
-        .write.mode("overwrite").format("noop").save()
-      catch { case scala.util.control.NonFatal(_) => failed += 1 }
+      try {
+        fn(spark, small.getAbsolutePath)
+          .write.mode("overwrite").format("noop").save()
+        None
+      } catch { case scala.util.control.NonFatal(_) => Some(name) }
     }
-    if (failed > 0)
-      System.err.println(s"Warmup: $failed entries failed on $small")
+    if (failed.nonEmpty)
+      System.err.println(s"Warmup: ${failed.size} entries failed on $small: " +
+        failed.mkString(", "))
   }
 }

@@ -46,9 +46,9 @@ final class ClaimAnalysisEngine(spark: SparkSession, hubPath: String,
     * the hub's key column ([[HubStore.migrateToBucketed]] — staged,
     * lease-guarded, idempotent; rows and downstream artifacts
     * unchanged). Hubs the upload flow births are bucketed already.
+    * `buckets = None` sizes the count from the largest month on disk.
     */
-  def migrateHubToBucketed(
-      buckets: Int = HubStore.defaultHubBuckets): Unit =
+  def migrateHubToBucketed(buckets: Option[Int] = None): Unit =
     HubStore.migrateToBucketed(spark, hubPath, buckets)
 
   def availablePeriods(): DataFrame = HubStore.catalog(spark, hubPath)
@@ -65,10 +65,11 @@ final class ClaimAnalysisEngine(spark: SparkSession, hubPath: String,
     * Returns true when the incremental path ran, false when a guard
     * (first build, spine growth, layout drift) forced the full rebuild
     * — the reference's only behavior ([[generateNestedSeries]] remains
-    * the full-rebuild JSON export for layout parity).
+    * the full-rebuild JSON export for layout parity). `buckets = None`
+    * sizes the mart's key buckets from the data ([[UploadFlow.run]]).
     */
   def uploadBatch(prepared: DataFrame, asOf: LocalDate, martDir: String,
-      buckets: Int = 64): Boolean =
+      buckets: Option[Int] = None): Boolean =
     UploadFlow.run(spark, prepared, hubPath, martDir, asOf.toString, buckets)
 
   /** Maintenance verb: rebuild the mart's child-grain count store from

@@ -16,6 +16,9 @@ import org.apache.spark.sql.functions._
   * Scale posture: dynamic partition overwrite rewrites only touched
   * months — at 100 TB an incremental upload touches a handful of
   * partitions, not the whole hub; reads prune on the partition columns.
+  * Hubs the [[UploadFlow]] births add a third `_key_bucket=` level whose
+  * count is sized from the first batch ([[bucketsFor]]): one bucket per
+  * month until a month outgrows one scan split.
   */
 object HubStore {
 
@@ -88,17 +91,17 @@ object HubStore {
     * replaying the journal against the merged hub. A throwing callback
     * aborts the upsert with the hub untouched.
     */
-  /** `firstWriteBuckets`: when the path holds no hub yet, Some(b)
-    * creates the key-hash BUCKETED layout ([[writeBucketedHub]])
-    * instead of the flat one — how [[UploadFlow]] makes bucketed the
+  /** `firstWrite`: the layout created when the path holds no hub yet.
+    * [[Bucketed]] creates the key-hash bucketed layout
+    * ([[writeBucketedHub]]) — how [[UploadFlow]] makes bucketed the
     * default for hubs it births without changing the behavior of
-    * direct upsert callers (None, the default, keeps the flat first
+    * direct upsert callers ([[Flat]], the default, keeps the flat first
     * write every existing spec pins). Ignored when the hub exists —
     * layout comes from the marker then.
     */
   def upsert(spark: SparkSession, incoming: DataFrame, path: String,
       onAffected: Set[Seq[Int]] => Unit = _ => (),
-      firstWriteBuckets: Option[Int] = None): Unit =
+      firstWrite: FirstWrite = Flat): Unit =
    // Leased on the hub path (round-12 self-review): every other
    // maintenance verb serializes against a running UploadFlow, but a
    // DIRECT upsert caller could still interleave with the flow's
@@ -265,15 +268,21 @@ object HubStore {
       // First write: every partition of the batch is "affected" (it is
       // being created) — the callback still fires so count maintenance
       // sees the initial load through the same channel as every
-      // incremental one.
-      val prepped = prepPartitionCols(incoming)
-      onAffected(prepped
-        .select(partitionCols.map(c => col(c).cast("int")): _*)
-        .distinct().collect()
+      // incremental one. The same collect carries each month's row
+      // count, which sizes a bucketed layout without another job.
+      val rows = incoming.drop(ingestSeqCol)
+      val monthRows = prepPartitionCols(rows)
+        .groupBy(partitionCols.map(c => col(c).cast("int")): _*).count()
+        .collect()
+      onAffected(monthRows
         .map(r => partitionCols.indices.map(r.getInt)).toSet)
-      firstWriteBuckets match {
-        case Some(b) => writeBucketedHub(incoming, path, b)
-        case None => write(incoming.drop(ingestSeqCol), path)
+      firstWrite match {
+        case Bucketed(b) =>
+          val largestMonth = monthRows
+            .map(_.getLong(partitionCols.size)).maxOption.getOrElse(0L)
+          writeBucketedHub(rows, path, b.getOrElse(bucketsFor(spark,
+            largestMonth * rows.schema.defaultSize)))
+        case Flat => write(rows, path)
       }
     }
    }
@@ -331,6 +340,33 @@ object HubStore {
       when(col(keyCol).isNull, lit(nullBucket.toLong))
         .otherwise(pmod(xxhash64(col(keyCol)), lit(buckets))))
 
+  /** Layout of the hub an [[upsert]] creates on an empty path. */
+  sealed trait FirstWrite
+
+  /** Two-level year/month partitions. */
+  case object Flat extends FirstWrite
+
+  /** Key-hash bucketed ([[writeBucketedHub]]); `buckets = None` sizes
+    * the count from the batch's largest month ([[bucketsFor]]).
+    */
+  final case class Bucketed(buckets: Option[Int] = None) extends FirstWrite
+
+  /** Key-bucket count for a store whose bucketed unit — one month of
+    * the hub, the whole mart — holds about `bytes`: the smallest power
+    * of two that keeps one bucket at or under one scan split
+    * (`spark.sql.files.maxPartitionBytes`). Finer buckets save no scan
+    * work, since a reader plans at least one task per file anyway, and
+    * each one adds a file to every write and a directory to every
+    * listing. Driver-side arithmetic only; callers pass an estimate
+    * they already hold.
+    */
+  private[claims] def bucketsFor(spark: SparkSession, bytes: Long): Int = {
+    val split = math.max(1L, spark.sessionState.conf.filesMaxPartitionBytes)
+    var b = 1
+    while (b < (1 << 20) && bytes > split * b) b *= 2
+    b
+  }
+
   /** Write the hub in the key-hash bucketed layout:
     * `접수년=Y/접수월=M/_key_bucket=B/` with B = xxhash64(상담번호) mod
     * `buckets`. Everything the flat layout gives (month pruning for
@@ -339,17 +375,10 @@ object HubStore {
     * rewrites: at 100 TB a batch touching k keys reads ~k/buckets of
     * each touched month for the probe and merge instead of the whole
     * month's key column. STATIC overwrite + meta marker, like the
-    * mart's bucketed writer.
+    * mart's bucketed writer. The count is fixed for the hub's life:
+    * [[upsert]] reads it from the marker.
     */
-  /** Default bucket count for hubs the upload flow births bucketed and
-    * for [[migrateToBucketed]]: sized so one bucket of one month stays
-    * a few files at fleet cardinality, while a typical batch's key set
-    * still prunes to a strict subset of buckets.
-    */
-  val defaultHubBuckets: Int = 32
-
-  def writeBucketedHub(df: DataFrame, path: String,
-      buckets: Int = defaultHubBuckets): Unit = {
+  def writeBucketedHub(df: DataFrame, path: String, buckets: Int): Unit = {
     require(buckets > 0, s"buckets must be positive: $buckets")
     val spark = df.sparkSession
     // Leased (round-11 verdict item 4): the static overwrite below
@@ -398,10 +427,13 @@ object HubStore {
     * finishes the rename without reading any data. The delete→rename
     * window is the one non-atomic moment and it is heal-by-rerun,
     * never data loss.
+    *
+    * `buckets = None` sizes the count from the largest month's bytes on
+    * disk ([[bucketsFor]], a driver-side listing).
     */
   def migrateToBucketed(spark: SparkSession, path: String,
-      buckets: Int = defaultHubBuckets): Unit = {
-    require(buckets > 0, s"buckets must be positive: $buckets")
+      buckets: Option[Int] = None): Unit = {
+    buckets.foreach(b => require(b > 0, s"buckets must be positive: $b"))
     MaintenanceLease.withLease(spark, path) {
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -417,11 +449,11 @@ object HubStore {
         return
       }
       readHubMeta(fs, root) match {
-        case Some(b) if b == buckets => return // already migrated
+        case Some(b) if buckets.forall(_ == b) => return // already migrated
         case Some(b) => throw new IllegalStateException(
           s"$path is already bucketed at $b buckets; re-bucketing to " +
-            s"$buckets is a deliberate operation — read the hub and " +
-            "writeBucketedHub to a new path")
+            s"${buckets.get} is a deliberate operation — read the hub " +
+            "and writeBucketedHub to a new path")
         case None => ()
       }
       // Finish any in-flight vacated-partition deletes first so the
@@ -432,12 +464,23 @@ object HubStore {
       // writeBucketedHub) still READS correctly; drop the partition
       // column so the staged write re-derives buckets from keys.
       val hub = read(spark, path).drop(bucketPartCol)
-      writeBucketedHub(hub, staging.toString, buckets)
+      writeBucketedHub(hub, staging.toString,
+        buckets.getOrElse(bucketsFor(spark, largestMonthBytes(fs, root))))
       fs.delete(root, true)
       require(fs.rename(staging, root),
         s"could not rename $staging to $root — re-run migrateToBucketed" +
           " to finish the swap")
     }
+  }
+
+  /** Bytes on disk of the hub's largest `접수년=/접수월=` directory. */
+  private def largestMonthBytes(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Long = {
+    def dirs(p: org.apache.hadoop.fs.Path) = fs.listStatus(p)
+      .filter(s => s.isDirectory && !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith("."))
+    (for (y <- dirs(root); m <- dirs(y.getPath))
+      yield fs.getContentSummary(m.getPath).getLength).maxOption.getOrElse(0L)
   }
 
   /** True when any third-level partition dir carries the bucket

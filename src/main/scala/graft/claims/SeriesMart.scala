@@ -1,7 +1,9 @@
 package graft.claims
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 
 /** Nested time-series datamart: one document per (플랜트, 제품범주2,
   * 대분류) with a zero-filled monthly history, per-중분류 children, and
@@ -261,6 +263,9 @@ object SeriesMart {
     * number of partitions, so a refresh touching few keys rewrites few
     * directories. Parquet (not JSON) so the read-back schema is exact
     * and the refresh's keep∪rebuilt union never drifts on inference.
+    * The refreshes size `buckets` from the count store at every full
+    * rebuild ([[HubStore.bucketsFor]]): one bucket until the mart
+    * outgrows one scan split.
     *
     * STATIC overwrite by default: a standalone write (and the full-
     * rebuild path) replaces the WHOLE mart, including buckets whose
@@ -271,7 +276,7 @@ object SeriesMart {
     * the point.
     */
   def writeBucketedMart(mart: DataFrame, dir: String,
-      buckets: Int = 64, dynamic: Boolean = false,
+      buckets: Int, dynamic: Boolean = false,
       spine: Option[(String, String)] = None): Unit = {
     mart.withColumn(bucketCol, pmod(xxhash64(col("key")), lit(buckets)))
       .write
@@ -302,9 +307,13 @@ object SeriesMart {
     * caller's guess; a marker-less layout (foreign/hand-written)
     * degrades to a key-filtered full scan rather than a wrong-bucket
     * miss.
+    *
+    * The read opens only the key's `key_bucket=` directory (with the
+    * mart as `basePath`) and the known document schema: no listing of
+    * the other buckets and no schema-inference job. A key whose bucket
+    * holds no documents yields an empty frame.
     */
-  def readDocument(spark: org.apache.spark.sql.SparkSession,
-      dir: String, key: String): DataFrame = {
+  def readDocument(spark: SparkSession, dir: String, key: String): DataFrame = {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Heal the vacated-bucket delete journal FIRST (r10 review): after
@@ -315,20 +324,59 @@ object SeriesMart {
     // one existence check in the common (no-crash) case.
     DeleteJournal.heal(fs, new org.apache.hadoop.fs.Path(dir),
       martPendingDeletesFile)
-    val base = spark.read.parquet(dir)
     readMartMeta(fs, dir) match {
       case Some((n, _)) =>
-        // The key's bucket is the same xxhash64 expression the writer
-        // uses, INLINED over literals — constant folding turns it into
-        // the bucket value at optimization time, so partition pruning
-        // fires without a separate driver job to pre-hash the key.
-        base.filter(col(bucketCol) === pmod(xxhash64(lit(key)), lit(n)) &&
-            col("key") === key)
-          .drop(bucketCol)
+        val bucket = new org.apache.hadoop.fs.Path(dir,
+          s"$bucketCol=${bucketsOf(spark, Set(key), n).head}")
+        if (!fs.exists(bucket))
+          spark.createDataFrame(java.util.List.of[Row](), documentSchema)
+        else spark.read.schema(documentSchema).option("basePath", dir)
+          .parquet(bucket.toString)
+          .filter(col("key") === key).drop(bucketCol)
       case None =>
-        base.filter(col("key") === key).drop(bucketCol)
+        spark.read.parquet(dir).filter(col("key") === key).drop(bucketCol)
     }
   }
+
+  /** Mart buckets of `keys`, by the writer's own xxhash64 expression —
+    * never a hand-rolled reimplementation that could drift from
+    * Spark's seed or encoding. Over a local relation the optimizer
+    * evaluates it on the driver, so no job runs.
+    */
+  private def bucketsOf(spark: SparkSession, keys: Set[String],
+      buckets: Int): Set[Long] = {
+    import spark.implicits._
+    keys.toSeq.toDF("key")
+      .select(pmod(xxhash64(col("key")), lit(buckets)))
+      .collect().map(_.getLong(0)).toSet
+  }
+
+  /** The document schema as parquet reads it back (every field
+    * nullable). [[build]] and [[buildFromCounts]] share [[assemble]],
+    * whose output types do not depend on the key columns' types, so
+    * analysing an empty count frame yields it.
+    */
+  private lazy val documentSchema: StructType = {
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case other => other
+    }
+    val spark = SparkSession.active
+    val grain = (parentKeys :+ childKey :+ "ym").map(StructField(_, StringType)) ++
+      Seq("n_all", "n_valid", "sum_lag").map(StructField(_, LongType))
+    nullable(buildFromCounts(spark.createDataFrame(java.util.List.of[Row](),
+      StructType(grain)), "").schema).asInstanceOf[StructType]
+  }
+
+  /** Bytes on disk of the files `df` scans, summed from the listing its
+    * file index already holds (no job, no file-system call); 0 for a
+    * frame that reads no files.
+    */
+  private def listedBytes(df: DataFrame): Long =
+    df.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location.sizeInBytes }.sum
 
   /** Mart metadata marker (leading `_` keeps it invisible to the
     * parquet reader, like `_SUCCESS`): the bucket count the layout was
@@ -536,8 +584,11 @@ object SeriesMart {
     *    document's zero-filled history. A direct [[writeBucketedMart]]
     *    layout lands here too: its marker is spine-less, which never
     *    equals the hub's concrete spine;
-    *  - the marker's bucket count differs from this call's `buckets` —
-    *    the union of two hash layouts would file keys inconsistently.
+    *  - an explicit `buckets` differs from the marker's count — the
+    *    union of two hash layouts would file keys inconsistently.
+    * `buckets = None` keeps the marker's count on the incremental path
+    * and sizes a full rebuild from the on-disk bytes of the input
+    * ([[HubStore.bucketsFor]]).
     * Returns true when the incremental path ran, false on a full
     * rebuild — callers can alert when uploads keep forcing full
     * regenerations.
@@ -555,7 +606,7 @@ object SeriesMart {
     * (spec-pinned; the honest reading of "last updated").
     */
   def refreshIncremental(hub: DataFrame, batch: DataFrame, asOf: String,
-      dir: String, buckets: Int = 64,
+      dir: String, buckets: Option[Int] = None,
       priorKeys: Set[String] = Set.empty): Boolean =
    // Leased (round-11 verdict item 4): a direct refresh racing a live
    // UploadFlow interleaved with its journal lifecycle silently; the
@@ -569,7 +620,8 @@ object SeriesMart {
     val spineOpt =
       if (hubSpine.isNullAt(0)) None
       else Some((hubSpine.getString(0), hubSpine.getString(1)))
-    refreshCore(spark, batch, dir, buckets, priorKeys, spineOpt,
+    refreshCore(spark, batch, dir, priorKeys, spineOpt, buckets,
+      sized = () => HubStore.bucketsFor(spark, listedBytes(hub)),
       buildAll = () => build(hub, asOf),
       buildTouched = (keys, spine) =>
         build(touchedRows(hub, keys), asOf, Some(spine)))
@@ -591,9 +643,9 @@ object SeriesMart {
     * `counts` must be current with the merged hub
     * ([[SeriesCounts.applyPending]] first — UploadFlow orders this).
     */
-  def refreshFromCounts(spark: org.apache.spark.sql.SparkSession,
+  def refreshFromCounts(spark: SparkSession,
       counts: DataFrame, batch: DataFrame, asOf: String,
-      dir: String, buckets: Int = 64,
+      dir: String, buckets: Option[Int] = None,
       priorKeys: Set[String] = Set.empty): Boolean =
    // Leased like [[refreshIncremental]]; the flow re-enters.
    MaintenanceLease.withLease(spark, dir) {
@@ -602,7 +654,8 @@ object SeriesMart {
     val spineOpt =
       if (spineRow.isNullAt(0)) None
       else Some((spineRow.getString(0), spineRow.getString(1)))
-    refreshCore(spark, batch, dir, buckets, priorKeys, spineOpt,
+    refreshCore(spark, batch, dir, priorKeys, spineOpt, buckets,
+      sized = () => HubStore.bucketsFor(spark, listedBytes(counts)),
       buildAll = () => buildFromCounts(counts, asOf, spineOpt),
       buildTouched = (keys, spine) => buildFromCounts(
         counts.filter(concat_ws("_", parentKeys.map(pyStr): _*)
@@ -611,13 +664,16 @@ object SeriesMart {
    }
 
   /** Shared refresh skeleton: guards, journals, touched-set assembly,
-    * keep∪rebuilt dynamic write, vacated-bucket deletes. `buildAll`
-    * produces the full mart for the guard-forced rebuild;
+    * keep∪rebuilt dynamic write, vacated-bucket deletes. A full
+    * rebuild writes `buckets`, or the `sized` count when None; the
+    * incremental path keeps the marker's count. `buildAll` produces
+    * the full mart for the guard-forced rebuild;
     * `buildTouched(keys, spine)` the touched keys' documents only.
     */
-  private def refreshCore(spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame, dir: String, buckets: Int,
+  private def refreshCore(spark: SparkSession,
+      batch: DataFrame, dir: String,
       priorKeys: Set[String], spineOpt: Option[(String, String)],
+      buckets: Option[Int], sized: () => Int,
       buildAll: () => DataFrame,
       buildTouched: (Set[String], (String, String)) => DataFrame): Boolean = {
     val martRoot = new org.apache.hadoop.fs.Path(dir)
@@ -640,16 +696,17 @@ object SeriesMart {
       // (buckets + spine) is stamped once, after the data commits —
       // a crash in between leaves a stale/absent marker, which the
       // next refresh reads as "rebuild again" (self-healing).
-      writeBucketedMart(buildAll(), dir, buckets, spine = spineOpt)
+      writeBucketedMart(buildAll(), dir, buckets.getOrElse(sized()),
+        spine = spineOpt)
       clearTouchedJournals(fs, dir, readTouchedJournals(fs, dir)._2)
       false
     }
     if (firstBuild || spineOpt.isEmpty) return fullRebuild()
     DeleteJournal.heal(fs, martRoot, martPendingDeletesFile)
-    val valid = readMartMeta(fs, dir).exists {
-      case (b, s) => b == buckets && s == spineOpt
+    val n = readMartMeta(fs, dir) match {
+      case Some((b, s)) if s == spineOpt && buckets.forall(_ == b) => b
+      case _ => return fullRebuild()
     }
-    if (!valid) return fullRebuild()
     val spine = spineOpt.get
     // Touched documents: the batch's parent-key set as mart keys, plus
     // the keys its claims were previously filed under (`priorKeys`),
@@ -666,27 +723,19 @@ object SeriesMart {
       clearTouchedJournals(fs, dir, journalFiles); return true
     }
     val existing = spark.read.parquet(dir)
-    // Buckets of the touched keys, computed by the SAME xxhash64
-    // expression the writer uses — never a hand-rolled reimplementation
-    // that could drift from Spark's seed or encoding.
-    val touchedBuckets = {
-      import spark.implicits._
-      touchedKeys.toSeq.toDF("key")
-        .select(pmod(xxhash64(col("key")), lit(buckets)))
-        .collect().map(_.getLong(0)).toSet
-    }
+    val touchedBuckets = bucketsOf(spark, touchedKeys, n)
     val rebuilt = buildTouched(touchedKeys, spine)
     val keep = keepRows(existing, touchedBuckets, touchedKeys)
     val out = graft.Checkpoint.pinTransient(
       keep.unionByName(rebuilt.select(keep.columns.map(col): _*)))
     try {
-      writeBucketedMart(out, dir, buckets, dynamic = true)
+      writeBucketedMart(out, dir, n, dynamic = true)
       // Touched buckets with zero surviving documents were never
       // visited by the dynamic write — delete them (journaled). The
-      // probe collects ≤ `buckets` longs off the pinned frame, never
-      // the documents themselves.
+      // probe collects ≤ `n` longs off the pinned frame, never the
+      // documents themselves.
       val outBuckets = out
-        .select(pmod(xxhash64(col("key")), lit(buckets)).as("b"))
+        .select(pmod(xxhash64(col("key")), lit(n)).as("b"))
         .distinct().collect().map(_.getLong(0)).toSet
       val vacated = (touchedBuckets -- outBuckets).toSeq.sorted
         .map(b => s"$bucketCol=$b")

@@ -45,11 +45,16 @@ object UploadFlow {
     * (false = a guard forced the full rebuild; see
     * [[SeriesMart.refreshFromCounts]] — with the count store the
     * rebuild is counts-bounded, not a hub rescan).
+    *
+    * Key-bucket counts: `buckets` (mart) and `hubLayout` (the hub's
+    * first write) default to counts sized from the data
+    * ([[HubStore.bucketsFor]]); an explicit count pins the layout.
+    * Stores that exist keep the count their marker records.
     */
   def run(spark: SparkSession, prepared: DataFrame, hubPath: String,
-      martDir: String, asOf: String, buckets: Int = 64,
+      martDir: String, asOf: String, buckets: Option[Int] = None,
       leaseTtlMs: Long = MaintenanceLease.defaultTtlMs,
-      hubBuckets: Option[Int] = Some(HubStore.defaultHubBuckets)): Boolean =
+      hubLayout: HubStore.FirstWrite = HubStore.Bucketed()): Boolean =
     // Single-writer lease over the whole flow ([[MaintenanceLease]]):
     // a second concurrent flow against the same mart fails loudly
     // HERE — before its probe, journal writes, or hub upsert — instead
@@ -73,13 +78,13 @@ object UploadFlow {
     MaintenanceLease.withLease(spark, martDir, leaseTtlMs) {
       MaintenanceLease.withLease(spark, hubPath, leaseTtlMs) {
         runUnlocked(spark, prepared, hubPath, martDir, asOf, buckets,
-          hubBuckets)
+          hubLayout)
       }
     }
 
   private def runUnlocked(spark: SparkSession, prepared: DataFrame,
       hubPath: String, martDir: String, asOf: String,
-      buckets: Int, hubBuckets: Option[Int]): Boolean = {
+      buckets: Option[Int], hubLayout: HubStore.FirstWrite): Boolean = {
 
     val countsDir = SeriesCounts.dirFor(martDir)
     // The batch lineage (CSV read + canonicalize + preprocess shuffle)
@@ -104,12 +109,12 @@ object UploadFlow {
       // priorParentKeys; the bucket-pruned path existed only for hubs
       // born bucketed). Existing hubs keep their layout — the upsert
       // detects it — and `HubStore.migrateToBucketed` converts a flat
-      // one in place. `hubBuckets = None` opts a flow back into the
-      // flat first-write.
+      // one in place. `hubLayout = HubStore.Flat` opts a flow back into
+      // the flat first-write.
       HubStore.upsert(spark, batch, hubPath,
         onAffected = parts =>
           SeriesCounts.journalParts(spark, countsDir, parts),
-        firstWriteBuckets = hubBuckets)
+        firstWrite = hubLayout)
       val merged = HubStore.read(spark, hubPath)
       SeriesCounts.applyPending(spark, merged, countsDir)
       SeriesMart.refreshFromCounts(spark,

@@ -38,11 +38,12 @@ object StreamingIngest {
     * idempotent under replay (keyed merge + journaled refresh).
     * `asOfClock` injects the mart's `last_updated` stamp per batch
     * (the library's usual wall-clock injection; defaults to the
-    * session-timezone current date).
+    * session-timezone current date). `martBuckets = None` sizes the
+    * mart's key buckets from the data ([[graft.claims.UploadFlow.run]]).
     */
   def start(spark: SparkSession, landingDir: String, hubPath: String,
       checkpointDir: String, martDir: Option[String] = None,
-      martBuckets: Int = 64,
+      martBuckets: Option[Int] = None,
       asOfClock: () => String = null,
       leaseTtlMs: Long = 5L * 60 * 1000)
       : StreamingQuery = {

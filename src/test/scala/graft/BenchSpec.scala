@@ -352,4 +352,34 @@ class BenchSpec extends AnyFunSuite {
     assert(real.nonEmpty && real.contains("q_anomaly_mad"),
       s"the committed BENCH_r*.json must parse, got ${real.size} entries")
   }
+
+  test("a throwing rep is never a timing; the artifact names failed entries") {
+    // A planted entry that always throws: no rep is timed, so it has no
+    // time at all — even a prior value cannot pull extra reps out of it.
+    val boom = Bench.timeEntry("q_boom",
+      () => throw new IllegalStateException("planted"), 2, Some(1e-6))
+    assert(boom.best.isEmpty && boom.failed && boom.reps == 2)
+    // A flaky entry: its thrown rep is dropped, the good reps time it.
+    var calls = 0
+    val flaky = Bench.timeEntry("q_flaky", () => {
+      calls += 1
+      if (calls == 1) throw new IllegalStateException("planted")
+      Thread.sleep(30)
+    }, 2, None)
+    assert(flaky.failed && flaky.best.exists(_ >= 0.03) && flaky.reps == 2)
+    val ok = Bench.timeEntry("q_ok", () => Thread.sleep(5), 2, None)
+    assert(!ok.failed && ok.best.isDefined)
+
+    // Only timed entries enter `value`; failed ones are named.
+    val results = Seq("q_ok" -> 0.5, "q_flaky" -> 0.25)
+    val line = Bench.artifactLine(results,
+      sentinel = Seq(0.05, 0.05, 0.05), scanSentinel = Seq(0.2, 0.2, 0.2),
+      parSentinel = Seq(0.3, 0.3, 0.3), repsUsed = Map.empty,
+      rechecked = Set.empty, repsDefault = 2, sfTag = "sf0.1",
+      failed = Seq("q_flaky", "q_boom"))
+    assert(line.contains(""""value":0.750,"""))
+    assert(line.contains(""""failed_n":2,"failed":["q_boom","q_flaky"]"""))
+    assert(!line.contains(""""q_boom":"""), "a never-timed entry has no time")
+    assert(line.length <= 1900)
+  }
 }

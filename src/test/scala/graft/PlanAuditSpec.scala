@@ -520,7 +520,7 @@ class PlanAuditSpec extends AnyFunSuite {
             (col("id") % 28 + 1).cast("string").as("접수일")))))
     graft.claims.HubStore.write(wide.drop(
       graft.claims.ClaimsSchema.ingestSeqCol), dir)  // born FLAT
-    graft.claims.HubStore.migrateToBucketed(spark, dir, buckets = 8)
+    graft.claims.HubStore.migrateToBucketed(spark, dir, buckets = Some(8))
     val probe = graft.claims.HubStore.oldLocationsBucketed(
         spark.read.parquet(dir), Seq("K7").toDF("상담번호"), 8)
       .select("접수년", "접수월", "_key_bucket").distinct()
@@ -575,7 +575,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val hub0 = graft.claims.ClaimsEtl.ingestCsv(spark,
       getClass.getResource("/claims_fixture.csv").getPath)
     graft.claims.SeriesMart.writeBucketedMart(
-      graft.claims.SeriesMart.build(hub0, "2024-02-01"), dir)
+      graft.claims.SeriesMart.build(hub0, "2024-02-01"), dir, buckets = 64)
     val existing = spark.read.parquet(dir)
     val someBucket = existing
       .select(col("key_bucket").cast("long")).distinct()

@@ -85,7 +85,10 @@ class ClaimsScaleSpec extends AnyFunSuite {
     // the maintenance I/O bounds at that width: one same-spine upload
     // touches ONE mart bucket of 64 and ONE count month partition, and
     // the risk scan plans the same exchange count as at fixture size
-    // (width changes data volume, never the shuffle shape).
+    // (width changes data volume, never the shuffle shape). The flow
+    // runs with explicit counts, 32 hub and 64 mart buckets: sized from
+    // the data, this hub and mart would each be one bucket, and the
+    // bucket-granular rewrite bounds below would hold trivially.
     val rows = 200000L
     val hub0 = spark.range(rows).select(
       concat(lit("K"), col("id")).as(ClaimsSchema.keyCol),
@@ -106,8 +109,11 @@ class ClaimsScaleSpec extends AnyFunSuite {
     val hubPath = s"$base/hub"
     val martDir = s"$base/mart"
     val countsDir = SeriesCounts.dirFor(martDir)
+    def upload(batch: org.apache.spark.sql.DataFrame, asOf: String): Boolean =
+      UploadFlow.run(spark, batch, hubPath, martDir, asOf, buckets = Some(64),
+        hubLayout = HubStore.Bucketed(Some(32)))
     val t0 = System.nanoTime()
-    assert(!UploadFlow.run(spark, hub0, hubPath, martDir, "2026-01-01"))
+    assert(!upload(hub0, "2026-01-01"))
     val built = (System.nanoTime() - t0) / 1e9
     assert(spark.read.parquet(martDir).count() == 5000)
     // The count store is grain-bounded: ≤ #children × #months (+ some
@@ -130,7 +136,7 @@ class ClaimsScaleSpec extends AnyFunSuite {
     val beforeHub = walkListing(hubPath)
     Thread.sleep(1100) // mtime resolution guard
     val t1 = System.nanoTime()
-    assert(UploadFlow.run(spark, batch, hubPath, martDir, "2026-02-01"),
+    assert(upload(batch, "2026-02-01"),
       "a same-spine single-series upload takes the incremental path")
     val inc = (System.nanoTime() - t1) / 1e9
     info(f"full build: $built%.1f s; incremental upload: $inc%.1f s")
@@ -181,7 +187,7 @@ class ClaimsScaleSpec extends AnyFunSuite {
       lit(5).as(ClaimsSchema.lagDaysCol))
       .withColumn("접수년", lit(2025)).withColumn("접수월", lit(3))
     val t2 = System.nanoTime()
-    assert(!UploadFlow.run(spark, extend, hubPath, martDir, "2026-03-01"),
+    assert(!upload(extend, "2026-03-01"),
       "a spine-extending upload reports the (counts-bounded) rebuild path")
     val ext = (System.nanoTime() - t2) / 1e9
     info(f"spine-extending upload at 5k/40k width: $ext%.1f s")
@@ -229,7 +235,7 @@ class ClaimsScaleSpec extends AnyFunSuite {
     val beforeCounts2 = walkListing(countsDir)
     Thread.sleep(1100) // mtime resolution guard
     val t3 = System.nanoTime()
-    assert(UploadFlow.run(spark, move, hubPath, martDir, "2026-04-01"),
+    assert(upload(move, "2026-04-01"),
       "a same-spine parent-key move takes the incremental path")
     info(f"parent-key move at 5k/40k width: ${(System.nanoTime() - t3) / 1e9}%.1f s")
     val afterMart2 = walkListing(martDir)

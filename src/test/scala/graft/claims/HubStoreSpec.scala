@@ -389,7 +389,7 @@ class HubStoreSpec extends AnyFunSuite {
     val pre = mkBatch(Seq(("C003", "2024", "3", "5")))
     HubStore.upsert(spark, pre, flat)
     HubStore.upsert(spark, pre, mig)
-    HubStore.migrateToBucketed(spark, mig, buckets = 4)
+    HubStore.migrateToBucketed(spark, mig, buckets = Some(4))
     val f = spark.read.parquet(flat)
     val b = spark.read.parquet(mig).drop(HubStore.bucketPartCol)
     assert(f.count() == b.count())
@@ -397,9 +397,9 @@ class HubStoreSpec extends AnyFunSuite {
       b.exceptAll(f.select(b.columns.map(col): _*)).isEmpty,
       "migration must be row-for-row identical to the flat hub")
     // Idempotent at the same bucket count; loud at a different one.
-    HubStore.migrateToBucketed(spark, mig, buckets = 4)
+    HubStore.migrateToBucketed(spark, mig, buckets = Some(4))
     val e = intercept[IllegalStateException] {
-      HubStore.migrateToBucketed(spark, mig, buckets = 8)
+      HubStore.migrateToBucketed(spark, mig, buckets = Some(8))
     }
     assert(e.getMessage.contains("already bucketed"))
     // The staging sibling is gone after a completed migration.
@@ -428,7 +428,7 @@ class HubStoreSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(dir), true) // the crash state
-    HubStore.migrateToBucketed(spark, dir, buckets = 4)
+    HubStore.migrateToBucketed(spark, dir, buckets = Some(4))
     assert(spark.read.parquet(dir).count() == 6)
     assert(new java.io.File(dir, HubStore.hubMetaFile).exists())
     assert(!new java.io.File(staging.toString).exists())
@@ -447,11 +447,11 @@ class HubStoreSpec extends AnyFunSuite {
     assert(!UploadFlow.run(spark, ingest(), s"$base/hubB", s"$base/martB",
       "2024-02-01"))
     assert(!UploadFlow.run(spark, ingest(), s"$base/hubF", s"$base/martF",
-      "2024-02-01", hubBuckets = None))
+      "2024-02-01", hubLayout = HubStore.Flat))
     assert(new java.io.File(s"$base/hubB", HubStore.hubMetaFile).exists(),
       "the flow's first write must create the bucketed layout")
     assert(!new java.io.File(s"$base/hubF", HubStore.hubMetaFile).exists(),
-      "hubBuckets = None keeps the flat first write")
+      "hubLayout = Flat keeps the flat first write")
     // Within-spine batch (2023-10 and 2024-01 both exist in the
     // fixture) so both flows take the incremental path.
     val batch = mkBatch(Seq(
@@ -459,7 +459,7 @@ class HubStoreSpec extends AnyFunSuite {
     assert(UploadFlow.run(spark, batch, s"$base/hubB", s"$base/martB",
       "2024-03-01"))
     assert(UploadFlow.run(spark, batch, s"$base/hubF", s"$base/martF",
-      "2024-03-01", hubBuckets = None))
+      "2024-03-01", hubLayout = HubStore.Flat))
     val mb = spark.read.parquet(s"$base/martB").drop("key_bucket")
     val mf = spark.read.parquet(s"$base/martF").drop("key_bucket")
     assert(mb.exceptAll(mf).isEmpty && mf.exceptAll(mb).isEmpty,

@@ -65,7 +65,7 @@ class MaintenanceLeaseSpec extends AnyFunSuite {
     MaintenanceLease.withLease(spark, martDir) {
       // The full-rebuild write wipes the mart dir completely.
       SeriesMart.writeBucketedMart(
-        SeriesMart.build(fixture, "2024-02-01"), martDir)
+        SeriesMart.build(fixture, "2024-02-01"), martDir, buckets = 64)
       heldDuring = fs.exists(marker)
     }
     assert(heldDuring,

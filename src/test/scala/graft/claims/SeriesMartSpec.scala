@@ -106,8 +106,11 @@ class SeriesMartSpec extends AnyFunSuite {
     val hub0 = ClaimsEtl.ingestCsv(spark,
       getClass.getResource("/claims_fixture.csv").getPath)
     val dir = java.nio.file.Files.createTempDirectory("martinc").toString
-    // First call: no mart yet → full build (returns false).
-    assert(!SeriesMart.refreshIncremental(hub0, hub0, "2024-02-01", dir))
+    // First call: no mart yet → full build (returns false). 64 buckets
+    // (the fixture alone would size to one) so the two documents land
+    // in different buckets.
+    assert(!SeriesMart.refreshIncremental(hub0, hub0, "2024-02-01", dir,
+      buckets = Some(64)))
     val before = parquetListing(dir)
     // Batch inside the existing 2023-10..2024-01 spine, touching only
     // PLANT_A's series.
@@ -119,8 +122,8 @@ class SeriesMartSpec extends AnyFunSuite {
     val hub1 = hub0.drop(ClaimsSchema.ingestSeqCol)
       .unionByName(batch.drop(ClaimsSchema.ingestSeqCol))
     Thread.sleep(1100) // mtime resolution guard
-    assert(SeriesMart.refreshIncremental(hub1, batch, "2024-03-01", dir),
-      "same-spine batch must take the incremental path")
+    assert(SeriesMart.refreshIncremental(hub1, batch, "2024-03-01", dir,
+      buckets = Some(64)), "same-spine batch must take the incremental path")
     // Ground truth: the full rebuild over the same merged hub. The
     // one LEGITIMATE divergence is meta.last_updated — an untouched
     // document was not updated, so it keeps its original stamp where
@@ -210,10 +213,11 @@ class SeriesMartSpec extends AnyFunSuite {
       ("C004", "2023", "11", "16", "PLANT_B", "CAT2_Y", "MAJOR_S")))
     val hub1 = mergeHub(hub0, batch)
     val dir = java.nio.file.Files.createTempDirectory("martdrain").toString
-    assert(!SeriesMart.refreshIncremental(hub0, hub0, "2024-02-01", dir))
+    assert(!SeriesMart.refreshIncremental(hub0, hub0, "2024-02-01", dir,
+      buckets = Some(64)))
     val priors = SeriesMart.priorParentKeys(hub0, batch)
     assert(SeriesMart.refreshIncremental(hub1, batch, "2024-03-01", dir,
-      priorKeys = priors))
+      buckets = Some(64), priorKeys = priors))
     assert(martDocs(dir) ==
       SeriesMart.build(hub1, "2024-03-01").toJSON.collect().toSet)
     val back = spark.read.parquet(dir)
@@ -290,16 +294,18 @@ class SeriesMartSpec extends AnyFunSuite {
     // Layout written with 64 buckets; a refresh asking for 8 would
     // union two hash layouts — must fall back to the full rebuild.
     val dir = java.nio.file.Files.createTempDirectory("martbkt").toString
-    assert(!SeriesMart.refreshIncremental(hub0, hub0, "2024-02-01", dir))
+    assert(!SeriesMart.refreshIncremental(hub0, hub0, "2024-02-01", dir,
+      buckets = Some(64)))
     assert(!SeriesMart.refreshIncremental(hub1, batch, "2024-03-01", dir,
-      buckets = 8), "bucket-count drift must force the full-rebuild path")
+      buckets = Some(8)), "bucket-count drift must force the full-rebuild path")
     assert(martDocs(dir) ==
       SeriesMart.build(hub1, "2024-03-01").toJSON.collect().toSet)
     // A mart written by writeBucketedMart directly has no meta marker:
     // the first refresh over it must full-rebuild (and self-heal by
     // writing the marker), not trust an unverifiable layout.
     val dir2 = java.nio.file.Files.createTempDirectory("martmeta").toString
-    SeriesMart.writeBucketedMart(SeriesMart.build(hub0, "2024-02-01"), dir2)
+    SeriesMart.writeBucketedMart(SeriesMart.build(hub0, "2024-02-01"), dir2,
+      buckets = 64)
     assert(!SeriesMart.refreshIncremental(hub1, batch, "2024-03-01", dir2),
       "meta-less layout must force the full-rebuild path")
     assert(SeriesMart.refreshIncremental(hub1, batch, "2024-04-01", dir2),
@@ -324,7 +330,8 @@ class SeriesMartSpec extends AnyFunSuite {
         (col("id") % 30).cast("int").as("Lag_Days"))
     val hub = syntheticHub(36000)
     val dir = java.nio.file.Files.createTempDirectory("martscale").toString
-    assert(!SeriesMart.refreshIncremental(hub, hub, "2024-01-01", dir))
+    assert(!SeriesMart.refreshIncremental(hub, hub, "2024-01-01", dir,
+      buckets = Some(64)))
     val docs0 = spark.read.parquet(dir)
     assert(docs0.count() == 1500)
     val before = parquetListing(dir)
@@ -336,7 +343,8 @@ class SeriesMartSpec extends AnyFunSuite {
       .withColumn("접수일자", to_date(col("접수일자")))
     val hub2 = hub.unionByName(batch)
     Thread.sleep(1100) // mtime resolution guard
-    assert(SeriesMart.refreshIncremental(hub2, batch, "2024-02-01", dir),
+    assert(SeriesMart.refreshIncremental(hub2, batch, "2024-02-01", dir,
+      buckets = Some(64)),
       "a same-spine single-series batch must take the incremental path")
 
     // Exactly the touched key's bucket changed; 1499 documents kept
@@ -361,20 +369,24 @@ class SeriesMartSpec extends AnyFunSuite {
   private val bucketColName = "key_bucket"
 
   test("point lookup prunes to one bucket and survives a marker-less layout") {
+    import spark.implicits._
     val hub0 = ClaimsEtl.ingestCsv(spark,
       getClass.getResource("/claims_fixture.csv").getPath)
     val dir = java.nio.file.Files.createTempDirectory("martread").toString
-    SeriesMart.writeBucketedMart(SeriesMart.build(hub0, "2024-02-01"), dir)
+    SeriesMart.writeBucketedMart(SeriesMart.build(hub0, "2024-02-01"), dir,
+      buckets = 64)
     val want = SeriesMart.build(hub0, "2024-02-01")
       .filter(col("key") === "PLANT_A_CAT2_X_MAJOR_P")
       .toJSON.collect().toSet
 
     val doc = SeriesMart.readDocument(spark, dir, "PLANT_A_CAT2_X_MAJOR_P")
     assert(doc.toJSON.collect().toSet == want)
-    // The bucketed path must prune the read to the key's partition.
-    assert("PartitionFilters: \\[[^\\]]*key_bucket".r
-      .findFirstIn(doc.queryExecution.executedPlan.toString).isDefined,
-      "point lookup must carry a key_bucket partition filter")
+    // The bucketed path must read only the key's partition directory.
+    val bucket = Seq("PLANT_A_CAT2_X_MAJOR_P").toDF("k")
+      .select(pmod(xxhash64(col("k")), lit(64))).collect()(0).getLong(0)
+    assert(doc.inputFiles.nonEmpty &&
+      doc.inputFiles.forall(_.contains(s"/key_bucket=$bucket/")),
+      s"point lookup must read only key_bucket=$bucket: ${doc.inputFiles.toSeq}")
 
     // A layout with no meta marker degrades to a key-filtered scan,
     // never a wrong-bucket miss.
@@ -383,6 +395,42 @@ class SeriesMartSpec extends AnyFunSuite {
     fs.delete(new org.apache.hadoop.fs.Path(dir, SeriesMart.martMetaFile), false)
     assert(SeriesMart.readDocument(spark, dir, "PLANT_A_CAT2_X_MAJOR_P")
       .toJSON.collect().toSet == want)
+  }
+
+  test("point lookup on a 64-bucket mart reads one bucket; an absent key is empty") {
+    import spark.implicits._
+    val hub0 = ClaimsEtl.ingestCsv(spark,
+      getClass.getResource("/claims_fixture.csv").getPath)
+    val dir = java.nio.file.Files.createTempDirectory("martread64").toString
+    val built = SeriesMart.build(hub0, "2024-02-01")
+    SeriesMart.writeBucketedMart(built, dir, buckets = 64)
+    def bucketOf(keys: Seq[String]): Map[String, Long] =
+      keys.toDF("k").select(col("k"), pmod(xxhash64(col("k")), lit(64)))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val keys = Seq("PLANT_A_CAT2_X_MAJOR_P", "PLANT_B_CAT2_Y_MAJOR_S")
+    val present = bucketOf(keys)
+    var schema: org.apache.spark.sql.types.StructType = null
+    for (k <- keys) {
+      val doc = SeriesMart.readDocument(spark, dir, k)
+      assert(doc.toJSON.collect().toSet ==
+        built.filter(col("key") === k).toJSON.collect().toSet)
+      assert(doc.inputFiles.nonEmpty && doc.inputFiles.forall(
+        _.contains(s"/key_bucket=${present(k)}/")), doc.inputFiles.toSeq)
+      schema = doc.schema
+    }
+    // Absent keys: one whose bucket directory does not exist, one that
+    // shares a bucket with a stored document. Both read back empty,
+    // with the document schema.
+    val probes = bucketOf((0 until 500).map(i => s"ABSENT_$i"))
+    val noDir = probes.find(p => !present.values.toSet(p._2)).get._1
+    val sharedDir = probes.find(p => present.values.toSet(p._2)).get._1
+    assert(!new java.io.File(dir, s"key_bucket=${probes(noDir)}").exists)
+    for (k <- Seq(noDir, sharedDir)) {
+      val doc = SeriesMart.readDocument(spark, dir, k)
+      assert(doc.collect().isEmpty, k)
+      assert(doc.schema.fieldNames.toSeq == schema.fieldNames.toSeq)
+      assert(doc.schema.map(_.dataType) == schema.map(_.dataType))
+    }
   }
 
   test("a spine-extending batch forces the guarded full rebuild") {
