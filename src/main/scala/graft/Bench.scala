@@ -1,32 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, sum}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      // Allow shuffled-hash joins where the planner's size conditions
-      // fit (measured 5-12% on the join-heavy graph
-      // entries): sort-merge stays the fallback, AQE still upgrades
-      // small sides to broadcast — this only removes the blanket
-      // prefer-sort bias, it is not a local-core-count tune.
-      // Skew caveat (guide §3.1/§5): a skewed build-side partition can
-      // OOM a shuffled-hash join where sort-merge would spill; the
-      // guard is AQE skew-join splitting (on by default whenever AQE
-      // is — PlanAuditSpec pins that this flag never ships with the
-      // guard disabled) plus the planner's own size conditions. At
-      // 100 TB, prefer per-join SHUFFLE_HASH hints over widening this
-      // default if any build side can be skew-heavy.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession.create(cpus)
     // Persisted-store warmth (round-15: the r14 artifact could not
     // distinguish a cold-store build from a regression —
     // q_dedup_incremental_store 0.34 -> 3.16 s on UNTOUCHED code). The
@@ -163,9 +141,11 @@ object Bench {
       // noop write materializes every output row AND column; count()
       // would let the optimizer prune the computed columns and time a
       // bare row count instead of the operator.
-      val t = timeEntry(name,
-        () => fn(spark, sfDir).write.mode("overwrite").format("noop").save(),
-        reps, priorMins.get(name))
+      val t = GraftSession.inJobGroup(spark, name) {
+        timeEntry(name,
+          () => fn(spark, sfDir).write.mode("overwrite").format("noop").save(),
+          reps, priorMins.get(name))
+      }
       repsUsed(name) = t.reps
       if (t.rechecked) rechecked += name
       if (t.failed) failed += name
@@ -183,17 +163,19 @@ object Bench {
       .map { case (k, v) => compactPinName(k, sfDir) -> v }
     println(artifactLine(results, sentinels.toSeq, scans.toSeq, pars.toSeq,
       repsUsed.toMap, rechecked.toSet, reps, sfDir.split('/').last,
-      cpus.toIntOption.getOrElse(32), storesBefore.size, coldStores,
+      cpus, storesBefore.size, coldStores,
       parSeg.toSeq, scanSeg.toSeq, pins, failed.toSeq))
     spark.stop()
   }
 
-  /** One entry's timing: the best of its successful reps, how many reps
-    * ran, whether the cross-round stabilizer re-repped it, and whether
-    * any rep threw.
+  /** One entry's timing: the seconds of its successful reps in run
+    * order, how many reps ran, whether the cross-round stabilizer
+    * re-repped it, and whether any rep threw.
     */
-  private[graft] final case class EntryTiming(best: Option[Double],
-      reps: Int, rechecked: Boolean, failed: Boolean)
+  private[graft] final case class EntryTiming(times: Seq[Double],
+      reps: Int, rechecked: Boolean, failed: Boolean) {
+    def best: Option[Double] = times.minOption
+  }
 
   /** Time `run` for `reps` reps plus the stabilizer's extra reps. A rep
     * that throws is never a timing: it is left out, logged by `name`,
@@ -204,18 +186,18 @@ object Bench {
       prior: Option[Double]): EntryTiming = {
     var ran = 0
     var failed = false
-    def rep(): Option[Double] = {
+    val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+    def rep(): Unit = {
       ran += 1
       val t0 = System.nanoTime()
-      try { run(); Some((System.nanoTime() - t0) / 1e9) }
+      try { run(); times += (System.nanoTime() - t0) / 1e9 }
       catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"Bench: $name failed: $e")
           failed = true
-          None
       }
     }
-    val times = (1 to reps).flatMap(_ => rep())
+    (1 to reps).foreach(_ => rep())
     // Adaptive third rep at ANY magnitude (round-9 finding: the
     // previous `min < 2 s` gate let BOTH reps of an entry inflate
     // past 2 s under external load — BENCH_r09 recorded 7.21 s for
@@ -225,15 +207,12 @@ object Bench {
     // of size: re-rep. Cost is bounded by the MIN rep, not the max —
     // a genuine slow entry has agreeing reps and never re-runs; only
     // load-divergent pairs pay one more rep.
-    val stabilized =
-      if (times.size == 2 && needsThirdRep(times)) times ++ rep()
-      else times
-    var best = stabilized.minOption
+    if (times.size == 2 && needsThirdRep(times.toSeq)) rep()
     var extra = 0
-    while (extra < 2 && best.exists(needsPriorRecheck(_, prior))) {
-      best = (best ++ rep()).minOption; extra += 1
+    while (extra < 2 && times.minOption.exists(needsPriorRecheck(_, prior))) {
+      rep(); extra += 1
     }
-    EntryTiming(best, ran, extra > 0, failed)
+    EntryTiming(times.toSeq, ran, extra > 0, failed)
   }
 
   /** Entries per normalization segment: small enough that a mid-run

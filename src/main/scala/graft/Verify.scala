@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,38 +9,7 @@ object Verify {
     // dump AND the emitted oracle_sql.json to those entries, so
     // scripts/selfcheck.py can gate a subset. The driver passes none.
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Oracle parity: DuckDB/pandas-style permissive semantics (null on
-      // bad cast, no div-by-zero errors), not Spark 4's ANSI default.
-      .config("spark.sql.ansi.enabled", "false")
-      // Allow shuffled-hash joins where the planner's size conditions
-      // fit (measured 5-12% on the join-heavy graph
-      // entries): sort-merge stays the fallback, AQE still upgrades
-      // small sides to broadcast — this only removes the blanket
-      // prefer-sort bias, it is not a local-core-count tune.
-      // Skew caveat (guide §3.1/§5): a skewed build-side partition can
-      // OOM a shuffled-hash join where sort-merge would spill; the
-      // guard is AQE skew-join splitting (on by default whenever AQE
-      // is — PlanAuditSpec pins that this flag never ships with the
-      // guard disabled) plus the planner's own size conditions. At
-      // 100 TB, prefer per-join SHUFFLE_HASH hints over widening this
-      // default if any build side can be skew-heavy.
-      // Applied to the VERIFICATION session deliberately (round-17,
-      // ADVICE): the oracle must compare the exact planner config the
-      // bench times — a join-strategy bug (an SHJ build-side overflow,
-      // a wrong result under the flag) has to fail verify, not surface
-      // only as a bench anomaly.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as long, converted
-      // in graft.Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     new java.io.File(outDir).mkdirs()
     // Session warmup so the first query's timing doesn't absorb
     // codegen/file-listing startup.
@@ -60,8 +28,10 @@ object Verify {
       // single-threaded); repartition inserts the boundary so only the
       // file write is single-task.
       try {
-        fn(spark, sfDir).repartition(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        GraftSession.inJobGroup(spark, name) {
+          fn(spark, sfDir).repartition(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+        }
         System.err.println(
           f"[verify] $name done in ${(System.nanoTime() - t0) / 1e9}%.1f s")
       }

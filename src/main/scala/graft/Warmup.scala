@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared JVM warm-up for the entry-point mains (Bench / Verify /
-  * RunQueries), so TIMED queries measure steady state, not one-time
-  * costs — parquet reader init, whole-stage codegen, and C2 JIT of the
-  * kernel loops. Two stages:
+/** Shared JVM warm-up for the entry-point mains (Bench, Verify, and
+  * Dev's `run` and `time`), so TIMED queries measure steady state, not
+  * one-time costs — parquet reader init, whole-stage codegen, and C2 JIT
+  * of the kernel loops. Two stages:
   *
   *  1. bounded kernel slice on `sfDir` itself (scan paths + the dedup
   *     kernels on 64 docs) — always runs;
@@ -69,8 +69,10 @@ object Warmup {
       // codegen would still compile cold inside the first TIMED entry —
       // the same materialization-honesty rule Bench.scala documents.
       try {
-        fn(spark, small.getAbsolutePath)
-          .write.mode("overwrite").format("noop").save()
+        GraftSession.inJobGroup(spark, name) {
+          fn(spark, small.getAbsolutePath)
+            .write.mode("overwrite").format("noop").save()
+        }
         None
       } catch { case scala.util.control.NonFatal(_) => Some(name) }
     }

@@ -669,8 +669,7 @@ object VectorQueries extends QueryModule {
     * approximate method against the exact top-10 must clear a fixed
     * floor of 0.8 — curation-grade near-dup recall, not the loose
     * 0.6/0.5 of earlier rounds. Sustained by the round-10 sweep
-    * (graft.AnnSweep, deterministic: seeded quantizer, fixed
-    * hyperplanes): multi-probe LSH r=2 measures 1.0/0.8/0.9 at
+    * (deterministic: seeded quantizer, fixed hyperplanes): multi-probe LSH r=2 measures 1.0/0.8/0.9 at
     * sf0.001/0.01/0.1 (r=3 reaches 1.0 everywhere at 2.5× the
     * broadcast probe count — the knob to turn first if a corpus dips);
     * IVF at nprobe=10 of 16 measures 0.9/0.8/1.0 (nprobe=6 sat at

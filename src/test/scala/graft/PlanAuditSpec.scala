@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Automated plan-quality guard over the WHOLE query surface: no query
   * may regress into a non-broadcast cartesian product, and the
@@ -590,34 +591,31 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("SHJ-by-default never ships with the AQE skew-join guard disabled") {
-    // Round-17 (r16 verdict item 8): the entry mains set
-    // spark.sql.join.preferSortMergeJoin=false, which lets the planner
-    // pick shuffled-hash joins — a build-side skewed partition can OOM
-    // an SHJ where sort-merge would spill (guide §3.1/§5). The guard
+    // GraftSession sets spark.sql.join.preferSortMergeJoin=false, which
+    // lets the planner pick shuffled-hash joins — a build-side skewed
+    // partition can OOM an SHJ where sort-merge would spill. The guard
     // that makes the default acceptable is AQE's runtime skew-join
-    // splitting. Two pins: (a) under this flag, a fresh session's
-    // effective config still has AQE + skewJoin enabled (the Spark
-    // defaults the mains rely on rather than re-set); (b) no entry
-    // main's source pairs the flag with a disable of either guard.
-    val conf = spark.conf
-    assert(conf.get("spark.sql.adaptive.enabled") === "true",
+    // splitting. Two pins: (a) a session carrying GraftSession's SQL
+    // settings has the SHJ default with AQE + skewJoin still enabled;
+    // (b) no file under src/main builds a session other than through
+    // GraftSession, so no main can drift from that config.
+    val s = spark.newSession()
+    GraftSession.sqlConf.foreach { case (k, v) => s.conf.set(k, v) }
+    assert(s.conf.get("spark.sql.join.preferSortMergeJoin") === "false",
+      "the measured SHJ default disappeared from GraftSession")
+    assert(s.conf.get("spark.sql.adaptive.enabled") === "true",
       "AQE must stay enabled — skew-join splitting rides on it")
-    assert(conf.get("spark.sql.adaptive.skewJoin.enabled") === "true",
+    assert(s.conf.get("spark.sql.adaptive.skewJoin.enabled") === "true",
       "AQE skew-join splitting is the SHJ-by-default safety guard")
-    val mains = Seq("Bench", "Verify", "RunQueries", "TimeQueries",
-      "Explain").map(n => s"src/main/scala/graft/$n.scala")
-    mains.foreach { p =>
-      val src = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(p)), "UTF-8")
-      assert(src.contains(
-        """.config("spark.sql.join.preferSortMergeJoin", "false")"""),
-        s"$p: the measured SHJ default disappeared — bench/verify " +
-          "configs must stay mirrored")
-      Seq("spark.sql.adaptive.enabled",
-        "spark.sql.adaptive.skewJoin.enabled").foreach { guard =>
-        assert(!src.contains(s""""$guard", "false""""),
-          s"$p disables $guard while defaulting to shuffled-hash joins")
-      }
+    val builders = {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+          .contains("SparkSession.builder"))
+        .map(_.getFileName.toString).toSeq.sorted
+      finally files.close()
     }
+    assert(builders === Seq("GraftSession.scala"),
+      "only GraftSession may call SparkSession.builder under src/main")
   }
 }

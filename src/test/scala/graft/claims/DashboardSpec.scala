@@ -4,20 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Parameterized over the session builder: the claims surface must
-  * behave identically with and without [[graft.plans.GraftExtensions]]
-  * (the optimizer rewrite may never perturb claims-side plans or
-  * results — VERDICT r5 #9).
-  */
-abstract class DashboardSpecBase(useExtensions: Boolean) extends AnyFunSuite
-    with org.scalatest.BeforeAndAfterAll {
+class DashboardSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = ClaimsTestSessions.build(useExtensions)
-
-  override def afterAll(): Unit = {
-    if (useExtensions) ClaimsTestSessions.teardown(spark)
-    super.afterAll()
-  }
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.ansi.enabled", "false")
+    .getOrCreate()
 
   test("month-end blend: day-rate extrapolation dominates without YoY") {
     val r = Dashboard.predictMonthEnd(
@@ -112,6 +107,3 @@ abstract class DashboardSpecBase(useExtensions: Boolean) extends AnyFunSuite
     assert(out.length == 2)
   }
 }
-
-class DashboardSpec extends DashboardSpecBase(false)
-class DashboardUnderExtensionsSpec extends DashboardSpecBase(true)

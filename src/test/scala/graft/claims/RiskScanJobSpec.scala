@@ -5,18 +5,15 @@ import java.time.LocalDate
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Parameterized like [[DashboardSpecBase]]: identical behavior with
-  * and without the optimizer extensions.
-  */
-abstract class RiskScanJobSpecBase(useExtensions: Boolean) extends AnyFunSuite
-    with org.scalatest.BeforeAndAfterAll {
+class RiskScanJobSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = ClaimsTestSessions.build(useExtensions)
-
-  override def afterAll(): Unit = {
-    if (useExtensions) ClaimsTestSessions.teardown(spark)
-    super.afterAll()
-  }
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.ansi.enabled", "false")
+    .getOrCreate()
 
   test("scan survives null dates by dropping those rows (F1 parse-failure convention)") {
     import spark.implicits._
@@ -35,6 +32,3 @@ abstract class RiskScanJobSpecBase(useExtensions: Boolean) extends AnyFunSuite
     assert(k1.getAs[String]("trend").endsWith("1 → 1 → 1"))
   }
 }
-
-class RiskScanJobSpec extends RiskScanJobSpecBase(false)
-class RiskScanJobUnderExtensionsSpec extends RiskScanJobSpecBase(true)
