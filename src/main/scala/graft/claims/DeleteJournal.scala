@@ -52,6 +52,22 @@ private[graft] object DeleteJournal {
         s"atomic marker rename failed: $tmp -> $marker")
   }
 
+  /** The `key=value` lines of a marker [[writeMarkerAtomic]] wrote
+    * (lines without `=` are skipped); empty when the marker is absent.
+    */
+  def readMarker(fs: FileSystem, root: Path,
+      markerName: String): Map[String, String] = {
+    val marker = new Path(root, markerName)
+    if (!fs.exists(marker)) return Map.empty
+    val in = fs.open(marker)
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .flatMap(_.split("=", 2) match {
+        case Array(k, v) => Some(k -> v)
+        case _ => None
+      }).toMap
+    finally in.close()
+  }
+
   /** Journal `rels` (paths relative to `root`) atomically, delete them,
     * then clear the journal. No-op for an empty list.
     */

@@ -81,8 +81,8 @@ object HubStore {
     * bidirectional schema alignment, dedup by claim id keeping the
     * newest (new batch wins over hub; within a batch the highest ingest
     * sequence wins) (ref: core/storage.py:75-130).
-    */
-  /** `onAffected` is invoked with the exact partition-value tuples
+    *
+    * `onAffected` is invoked with the exact partition-value tuples
     * (in [[ClaimsSchema.partitionCols]] order) this upsert will
     * rewrite, vacate, or create — AFTER the probe, BEFORE the
     * overwrite commits. [[UploadFlow]] journals the set durably there
@@ -90,8 +90,8 @@ object HubStore {
     * partitions after the commit, and a crash in between is healed by
     * replaying the journal against the merged hub. A throwing callback
     * aborts the upsert with the hub untouched.
-    */
-  /** `firstWrite`: the layout created when the path holds no hub yet.
+    *
+    * `firstWrite`: the layout created when the path holds no hub yet.
     * [[Bucketed]] creates the key-hash bucketed layout
     * ([[writeBucketedHub]]) — how [[UploadFlow]] makes bucketed the
     * default for hubs it births without changing the behavior of
@@ -217,10 +217,7 @@ object HubStore {
         // the common hub whose ingest filters null keys — P2).
         val keys = inc.filter(col(keyCol).isNotNull)
           .select(col(keyCol)).distinct()
-        val oldLoc = hubBuckets match {
-          case Some(b) => oldLocationsBucketed(hub, keys, b)
-          case None => oldLocations(hub, keys)
-        }
+        val oldLoc = oldLocationsFor(hub, keys, hubBuckets)
         val nullKeyRows = hubBuckets match {
           // Bucketed: null keys live ONLY in the sentinel bucket —
           // a partition filter, no key-column scan at all.
@@ -493,20 +490,13 @@ object HubStore {
         fs.listStatus(m.getPath).exists(
           _.getPath.getName.startsWith(bucketPartCol + "="))))
 
+  /** The hub's bucket count from its [[hubMetaFile]] marker; None when
+    * the marker is absent or records no positive count.
+    */
   private[claims] def readHubMeta(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Option[Int] = {
-    val marker = new org.apache.hadoop.fs.Path(root, hubMetaFile)
-    if (!fs.exists(marker)) return None
-    val in = fs.open(marker)
-    val kv =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .flatMap(_.split("=", 2) match {
-          case Array(k, v) => Some(k -> v)
-          case _ => None
-        }).toMap
-      finally in.close()
-    kv.get("buckets").flatMap(_.toIntOption).filter(_ > 0)
-  }
+      root: org.apache.hadoop.fs.Path): Option[Int] =
+    DeleteJournal.readMarker(fs, root, hubMetaFile).get("buckets")
+      .flatMap(_.toIntOption).filter(_ > 0)
 
   /** Bucket-pruned old-locations probe: the batch keys' bucket set is
     * batch-sized (computed with the SAME xxhash64 expression the
@@ -532,6 +522,16 @@ object HubStore {
     */
   private[graft] def oldLocations(hub: DataFrame, keys: DataFrame): DataFrame =
     hub.join(broadcast(keys), Seq(keyCol), "left_semi")
+
+  /** The old-locations probe the hub's layout allows: bucket-pruned
+    * ([[oldLocationsBucketed]]) when `buckets` is the count its marker
+    * records ([[readHubMeta]]), the flat key-column semi-join
+    * ([[oldLocations]]) when it has none. [[upsert]] and
+    * [[SeriesMart.priorParentKeys]] both probe through here.
+    */
+  private[claims] def oldLocationsFor(hub: DataFrame, keys: DataFrame,
+      buckets: Option[Int]): DataFrame =
+    buckets.fold(oldLocations(hub, keys))(oldLocationsBucketed(hub, keys, _))
 
   /** Journal of vacated-partition deletes in flight ([[DeleteJournal]])
     * — written only AFTER the merged overwrite commits, so every dir it
@@ -580,24 +580,6 @@ object HubStore {
       .groupBy(col("접수년"), col("접수월"))
       .agg(count(lit(1)).as("건수"))
       .orderBy(col("접수년").desc, col("접수월").desc)
-
-  /** Bucketed variant of the hub for co-located keyed joins: clustering
-    * + sorting by the claim key lets repeated merges/joins on 상담번호
-    * skip their shuffles entirely (bucket-aware SortMergeJoin). At
-    * 100 TB this is the difference between re-shuffling the whole hub
-    * on every upsert and a map-side merge per bucket. Registered as a
-    * catalog table (bucket metadata lives in the catalog, not parquet).
-    */
-  def writeBucketed(df: DataFrame, table: String, path: String,
-      buckets: Int = 32): Unit =
-    prepPartitionCols(df)
-      .write
-      .bucketBy(buckets, keyCol)
-      .sortBy(keyCol)
-      .option("path", path)
-      .mode("overwrite")
-      .format("parquet")
-      .saveAsTable(table)
 
   def exists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)

@@ -40,8 +40,8 @@ import org.apache.spark.sql.functions._
   * 100 TB posture: the store is #child-grains × #months rows (orders
   * of magnitude under the hub); each upload's replacement reads only
   * the touched hub partitions, column-pruned to the seven count
-  * inputs; mart refresh then reads counts only — no hub columns at
-  * all ([[SeriesMart.refreshFromCounts]] takes no hub argument).
+  * inputs; the mart refresh ([[SeriesMart.refreshFromCounts]]) then
+  * reads count rows only.
   */
 object SeriesCounts {
 

@@ -72,9 +72,6 @@ object SeriesMart {
     regexp_replace(coalesce(col(c).cast("string"), lit("")),
       "[\\\\/:*?\"<>|]", "-")
 
-  /** Build the mart as a DataFrame of nested documents. `asOf` stands in
-    * for the reference's wall-clock `last_updated`.
-    */
   /** USING-style join with NULL-SAFE key equality: the grouped sides
     * keep null-key groups, and ClaimsEtl canonicalization produces
     * null keys for ANY column missing from an upload — a plain
@@ -91,15 +88,17 @@ object SeriesMart {
     left.join(renamed, cond, how).drop(cols.map(c => s"__r_$c"): _*)
   }
 
+  /** Build the mart as a DataFrame of nested documents. `asOf` stands in
+    * for the reference's wall-clock `last_updated`.
+    */
   def build(claims: DataFrame, asOf: String,
       spine: Option[(String, String)] = None): DataFrame = {
     val base = claims.withColumn("ym",
       date_format(col(ClaimsSchema.receiptDateCol), "yyyy-MM"))
 
     // global month spine (dated rows only). `spine` overrides the
-    // bounds — the incremental refresh rebuilds a SUBSET of keys but
-    // their histories must span the same global months as every other
-    // document ([[refreshIncremental]]).
+    // bounds: documents built for a SUBSET of keys must span the same
+    // global months as every other document.
     val bounds = spine match {
       case Some((lo, hi)) =>
         val s = claims.sparkSession
@@ -263,21 +262,24 @@ object SeriesMart {
     * number of partitions, so a refresh touching few keys rewrites few
     * directories. Parquet (not JSON) so the read-back schema is exact
     * and the refresh's keep∪rebuilt union never drifts on inference.
-    * The refreshes size `buckets` from the count store at every full
+    * The refresh sizes `buckets` from the count store at every full
     * rebuild ([[HubStore.bucketsFor]]): one bucket until the mart
-    * outgrows one scan split.
+    * outgrows one scan split. `buckets` must be positive: pmod by 0 is
+    * NULL, which would file every document under the HIVE default
+    * partition.
     *
     * STATIC overwrite by default: a standalone write (and the full-
     * rebuild path) replaces the WHOLE mart, including buckets whose
     * documents all disappeared — dynamic overwrite would leave those
     * buckets' old files as ghost documents no fresh build produces.
-    * Only [[refreshIncremental]]'s touched-bucket write passes
+    * Only [[refreshFromCounts]]'s touched-bucket write passes
     * `dynamic = true`, where untouched buckets keeping their bytes is
     * the point.
     */
   def writeBucketedMart(mart: DataFrame, dir: String,
       buckets: Int, dynamic: Boolean = false,
       spine: Option[(String, String)] = None): Unit = {
+    require(buckets > 0, s"buckets must be positive: $buckets")
     mart.withColumn(bucketCol, pmod(xxhash64(col("key")), lit(buckets)))
       .write
       .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
@@ -288,7 +290,7 @@ object SeriesMart {
     // with `spine` when the caller knows it (the guarded full
     // rebuild), buckets-only otherwise (a direct call) so point
     // lookups ([[readDocument]]) can still prune while
-    // [[refreshIncremental]] treats the spine-less layout as
+    // [[refreshFromCounts]] treats the spine-less layout as
     // unverifiable and full-rebuilds. The incremental (dynamic) path
     // leaves the meta alone — its caller validated it already.
     if (!dynamic) {
@@ -381,7 +383,7 @@ object SeriesMart {
   /** Mart metadata marker (leading `_` keeps it invisible to the
     * parquet reader, like `_SUCCESS`): the bucket count the layout was
     * written with and the month spine its histories span. Read by
-    * [[refreshIncremental]] to validate that an incremental write is
+    * [[refreshFromCounts]] to validate that an incremental write is
     * meaningful — a bucket-count change or spine drift silently
     * corrupts a dynamic-overwrite union, so either forces the full
     * rebuild. Written temp-then-rename so a crash never leaves a torn
@@ -396,21 +398,14 @@ object SeriesMart {
       s"buckets=$buckets\n" + spine.fold("")(s =>
         s"lo=${s._1}\nhi=${s._2}\n"))
 
+  /** (bucket count, spine) from the [[martMetaFile]] marker; None when
+    * the marker is absent or records no positive bucket count.
+    */
   private def readMartMeta(fs: org.apache.hadoop.fs.FileSystem,
       dir: String): Option[(Int, Option[(String, String)])] = {
-    val marker = new org.apache.hadoop.fs.Path(dir, martMetaFile)
-    if (!fs.exists(marker)) return None
-    val in = fs.open(marker)
-    val kv =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .flatMap { l =>
-          l.split("=", 2) match {
-            case Array(k, v) => Some(k -> v)
-            case _ => None
-          }
-        }.toMap
-      finally in.close()
-    kv.get("buckets").flatMap(b => scala.util.Try(b.toInt).toOption)
+    val kv = DeleteJournal.readMarker(fs,
+      new org.apache.hadoop.fs.Path(dir), martMetaFile)
+    kv.get("buckets").flatMap(_.toIntOption).filter(_ > 0)
       .map(b => (b, for (lo <- kv.get("lo"); hi <- kv.get("hi")) yield (lo, hi)))
   }
 
@@ -419,45 +414,38 @@ object SeriesMart {
     * is about to move away from. An upload that corrects a claim's
     * 플랜트/제품범주2/대분류 changes its mart document; the batch alone
     * only names the NEW document, and without the old one in the
-    * touched set [[refreshIncremental]] would leave it permanently
+    * touched set [[refreshFromCounts]] would leave it permanently
     * stale. Null-key batch rows never match (they cannot be updates of
     * an existing claim — the hub merge collapses them separately).
     */
-  def priorParentKeys(preUpsertHub: DataFrame, batch: DataFrame): Set[String] = {
-    val keys = batch.filter(col(ClaimsSchema.keyCol).isNotNull)
-      .select(col(ClaimsSchema.keyCol)).distinct()
-    // Same broadcast-semi-join probe the upsert runs (HubStore.
-    // oldLocations, Catalyst-pruned to key + parent columns). An
-    // upload pays it twice — once here against the pre-upsert hub,
-    // once inside the upsert — a deliberate trade: both scans are
-    // narrow (probe columns only), and fusing them would mean the
-    // upsert API accepting a precomputed probe it cannot trust.
-    HubStore.oldLocations(preUpsertHub, keys)
-      .select(concat_ws("_", parentKeys.map(pyStr): _*).as("key"))
-      .distinct().collect().map(_.getString(0)).toSet
-  }
+  def priorParentKeys(preUpsertHub: DataFrame, batch: DataFrame): Set[String] =
+    probeParentKeys(preUpsertHub, batch, None)
 
-  /** Path-aware [[priorParentKeys]]: on a bucketed hub layout the
-    * probe prunes to the batch keys' bucket partitions (the same
-    * [[HubStore.oldLocationsBucketed]] pruning the upsert's own probe
-    * gets), turning the flow's last full-hub narrow scan into a
-    * touched-buckets read. Falls back to the flat probe when the
-    * layout carries no bucket marker.
+  /** Path-aware [[priorParentKeys]]: the hub's own layout marker picks
+    * the probe ([[HubStore.oldLocationsFor]]), so on a bucketed hub it
+    * prunes to the batch keys' bucket partitions, as the upsert's own
+    * probe does.
     */
   def priorParentKeys(spark: org.apache.spark.sql.SparkSession,
       hubPath: String, batch: DataFrame): Set[String] = {
     val root = new org.apache.hadoop.fs.Path(hubPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hub = HubStore.read(spark, hubPath)
-    HubStore.readHubMeta(fs, root) match {
-      case Some(b) =>
-        val keys = batch.filter(col(ClaimsSchema.keyCol).isNotNull)
-          .select(col(ClaimsSchema.keyCol)).distinct()
-        HubStore.oldLocationsBucketed(hub, keys, b)
-          .select(concat_ws("_", parentKeys.map(pyStr): _*).as("key"))
-          .distinct().collect().map(_.getString(0)).toSet
-      case None => priorParentKeys(hub, batch)
-    }
+    probeParentKeys(HubStore.read(spark, hubPath), batch,
+      HubStore.readHubMeta(fs, root))
+  }
+
+  private def probeParentKeys(hub: DataFrame, batch: DataFrame,
+      hubBuckets: Option[Int]): Set[String] = {
+    val keys = batch.filter(col(ClaimsSchema.keyCol).isNotNull)
+      .select(col(ClaimsSchema.keyCol)).distinct()
+    // The upsert's own probe (narrow: key + partition columns). An
+    // upload pays it twice — once here against the pre-upsert hub,
+    // once inside the upsert — a deliberate trade: both scans are
+    // narrow, and fusing them would mean the upsert API accepting a
+    // precomputed probe it cannot trust.
+    HubStore.oldLocationsFor(hub, keys, hubBuckets)
+      .select(concat_ws("_", parentKeys.map(pyStr): _*).as("key"))
+      .distinct().collect().map(_.getString(0)).toSet
   }
 
   /** Durable record of the parent keys an IN-FLIGHT upload touches —
@@ -466,7 +454,7 @@ object SeriesMart {
     * only in driver memory; if the process dies between the hub commit
     * and the completed mart refresh, a retry re-probes the ALREADY-
     * MERGED hub, finds only the claims' NEW locations, and the vacated
-    * document would stay stale forever. [[refreshIncremental]] unions
+    * document would stay stale forever. [[refreshFromCounts]] unions
     * every journaled generation into its touched set and clears
     * exactly the generations it read once the refresh completes —
     * regenerating an already-fresh document is idempotent, so
@@ -525,30 +513,6 @@ object SeriesMart {
     */
   private[claims] val martPendingDeletesFile = "_graft_mart_pending_deletes"
 
-  /** The hub rows whose series a refresh must rebuild — the touched
-    * keys' rows, and ONLY theirs (a touched key with no rows left —
-    * a parent-key move drained it — simply yields no document).
-    *
-    * The filter is DELIBERATELY the computed concat, not per-column
-    * equalities Parquet could push down: the mart key is LOSSY
-    * (components may contain the "_" separator — the fixture's own
-    * "PLANT_A"/"CAT2_X" do — and Python-str null is the literal
-    * "None"), so distinct parent tuples can share one mart key. The
-    * keep-filter drops existing documents BY KEY, so the rebuild must
-    * regenerate every tuple colliding into a touched key or the
-    * collision partner's document is silently lost; only the concat
-    * form matches exactly that set. Cost profile: one column-pruned
-    * hub scan per refresh (Catalyst prunes the read to the handful of
-    * columns [[build]] consumes — PlanAuditSpec pins it) — already
-    * the delta-rebuild improvement over the reference's full
-    * regenerate; row-group skipping on top would need an injective
-    * key encoding the reference's schema forbids.
-    */
-  private[graft] def touchedRows(hub: DataFrame,
-      touchedKeys: Set[String]): DataFrame =
-    hub.filter(
-      concat_ws("_", parentKeys.map(pyStr): _*).isin(touchedKeys.toSeq: _*))
-
   /** Untouched documents sharing a touched bucket, carried over
     * byte-equal by the refresh. The bucket filter prunes the parquet
     * read to the touched PARTITIONS (PlanAuditSpec pins the
@@ -566,116 +530,60 @@ object SeriesMart {
     * implementation never achieved (core/storage.py:504+ regenerates
     * every document per upload). Regenerates ONLY the parent series
     * the `batch` touches and rewrites only their hash buckets; every
-    * other document keeps its bytes.
-    *
-    * This is the HUB-SCAN form, kept for callers without a maintained
-    * count store: its touched rebuild and spine probe each read the
-    * (column-pruned) hub. [[UploadFlow]] routes through
-    * [[refreshFromCounts]] instead, whose reads are counts-bounded —
-    * prefer that path wherever a [[SeriesCounts]] store exists.
+    * other document keeps its bytes. Every document is assembled from
+    * the maintained [[SeriesCounts]] store ([[buildFromCounts]]) and
+    * the global-spine probe aggregates count rows, so every read is
+    * counts-bounded; the refresh takes no hub at all. `counts` must be
+    * current with the merged hub ([[SeriesCounts.applyPending]] first
+    * — [[UploadFlow]] orders this).
     *
     * VALIDITY GUARDS (any failing one runs the full rebuild instead):
-    *  - first build (no mart, or no [[martMetaFile]] marker — a layout
-    *    written before the marker existed — self-heals on the next
-    *    refresh);
-    *  - the mart's month spine (from the marker) differs from the
-    *    hub's — the spine is GLOBAL (min→max receipt month over the
-    *    whole hub), so a batch whose dates extend it changes every
-    *    document's zero-filled history. A direct [[writeBucketedMart]]
-    *    layout lands here too: its marker is spine-less, which never
-    *    equals the hub's concrete spine;
-    *  - an explicit `buckets` differs from the marker's count — the
-    *    union of two hash layouts would file keys inconsistently.
+    *  - first build: no mart data yet, or no dated count row to span
+    *    a spine;
+    *  - missing marker: no [[martMetaFile]], or one with no positive
+    *    bucket count (a layout written before the marker existed, or
+    *    a foreign one) — self-heals, since the rebuild stamps it;
+    *  - spine drift: the marker's month spine differs from the
+    *    counts'. The spine is GLOBAL (min→max receipt month over the
+    *    whole hub), so a batch whose dates extend it — the first upload
+    *    of every month — changes every document's zero-filled history.
+    *    A direct [[writeBucketedMart]] layout lands here too: its
+    *    marker is spine-less, which never equals a concrete spine;
+    *  - bucket-count drift: an explicit `buckets` differs from the
+    *    marker's count — the union of two hash layouts would file keys
+    *    inconsistently.
     * `buckets = None` keeps the marker's count on the incremental path
-    * and sizes a full rebuild from the on-disk bytes of the input
+    * and sizes a full rebuild from the count store's bytes on disk
     * ([[HubStore.bucketsFor]]).
     * Returns true when the incremental path ran, false on a full
-    * rebuild — callers can alert when uploads keep forcing full
-    * regenerations.
+    * rebuild (every document rebuilt and re-stamped) — callers can
+    * alert when uploads keep forcing full regenerations.
     *
-    * `hub` must already contain the batch (refresh AFTER the hub
-    * upsert, reading the merged truth — the reference's ordering).
     * `priorKeys` — the batch claims' PRE-upsert mart keys, from
     * [[priorParentKeys]] run against the hub BEFORE the upsert — makes
     * a parent-key move regenerate the document the claim left, not
     * only the one it arrived in; omitting it is safe only when uploads
     * never re-file an existing claim under new 플랜트/제품범주2/대분류.
-    * Untouched documents are carried over byte-for-byte, INCLUDING
-    * `meta.last_updated` — a document not updated keeps its original
-    * stamp, where a full rebuild re-stamps everything with `asOf`
-    * (spec-pinned; the honest reading of "last updated").
-    */
-  def refreshIncremental(hub: DataFrame, batch: DataFrame, asOf: String,
-      dir: String, buckets: Option[Int] = None,
-      priorKeys: Set[String] = Set.empty): Boolean =
-   // Leased (round-11 verdict item 4): a direct refresh racing a live
-   // UploadFlow interleaved with its journal lifecycle silently; the
-   // flow itself re-enters (it already holds the mart lease).
-   MaintenanceLease.withLease(hub.sparkSession, dir) {
-    val spark = hub.sparkSession
-    val hubSpine = hub
-      .withColumn("ym", date_format(col(ClaimsSchema.receiptDateCol), "yyyy-MM"))
-      .filter(col("ym").isNotNull)
-      .agg(min("ym"), max("ym")).collect()(0)
-    val spineOpt =
-      if (hubSpine.isNullAt(0)) None
-      else Some((hubSpine.getString(0), hubSpine.getString(1)))
-    refreshCore(spark, batch, dir, priorKeys, spineOpt, buckets,
-      sized = () => HubStore.bucketsFor(spark, listedBytes(hub)),
-      buildAll = () => build(hub, asOf),
-      buildTouched = (keys, spine) =>
-        build(touchedRows(hub, keys), asOf, Some(spine)))
-   }
-
-  /** The O(delta) refresh ([[graft.claims.UploadFlow]]'s path): same
-    * semantics and guards as [[refreshIncremental]], with every
-    * document rebuilt from the maintained [[SeriesCounts]] store —
-    * NO hub argument at all, so no refresh-time hub scan exists to
-    * mis-scope. The two previously-O(hub) costs become counts-bounded:
-    *  - the global-spine probe aggregates count rows, not hub rows;
-    *  - a spine-EXTENDING batch (the first upload of every month — the
-    *    most common production event) still rewrites every document
-    *    (all histories gain a month, so all buckets must change), but
-    *    assembles them from #keys × #months count rows instead of
-    *    rescanning the entire hub. It still returns false: every
-    *    document was rebuilt and re-stamped, which is what the return
-    *    value reports.
-    * `counts` must be current with the merged hub
-    * ([[SeriesCounts.applyPending]] first — UploadFlow orders this).
+    *
+    * `last_updated`: untouched documents are carried over
+    * byte-for-byte, INCLUDING `meta.last_updated` — a document not
+    * updated keeps its original stamp, where a full rebuild re-stamps
+    * everything with `asOf` (spec-pinned; the honest reading of "last
+    * updated").
     */
   def refreshFromCounts(spark: SparkSession,
       counts: DataFrame, batch: DataFrame, asOf: String,
       dir: String, buckets: Option[Int] = None,
       priorKeys: Set[String] = Set.empty): Boolean =
-   // Leased like [[refreshIncremental]]; the flow re-enters.
+   // Leased: a direct refresh racing a live UploadFlow would interleave
+   // with its journal lifecycle silently; the flow itself re-enters (it
+   // already holds the mart lease).
    MaintenanceLease.withLease(spark, dir) {
     val spineRow = counts.filter(col("ym").isNotNull)
       .agg(min("ym"), max("ym")).collect()(0)
     val spineOpt =
       if (spineRow.isNullAt(0)) None
       else Some((spineRow.getString(0), spineRow.getString(1)))
-    refreshCore(spark, batch, dir, priorKeys, spineOpt, buckets,
-      sized = () => HubStore.bucketsFor(spark, listedBytes(counts)),
-      buildAll = () => buildFromCounts(counts, asOf, spineOpt),
-      buildTouched = (keys, spine) => buildFromCounts(
-        counts.filter(concat_ws("_", parentKeys.map(pyStr): _*)
-          .isin(keys.toSeq: _*)),
-        asOf, Some(spine)))
-   }
-
-  /** Shared refresh skeleton: guards, journals, touched-set assembly,
-    * keep∪rebuilt dynamic write, vacated-bucket deletes. A full
-    * rebuild writes `buckets`, or the `sized` count when None; the
-    * incremental path keeps the marker's count. `buildAll` produces
-    * the full mart for the guard-forced rebuild;
-    * `buildTouched(keys, spine)` the touched keys' documents only.
-    */
-  private def refreshCore(spark: SparkSession,
-      batch: DataFrame, dir: String,
-      priorKeys: Set[String], spineOpt: Option[(String, String)],
-      buckets: Option[Int], sized: () => Int,
-      buildAll: () => DataFrame,
-      buildTouched: (Set[String], (String, String)) => DataFrame): Boolean = {
     val martRoot = new org.apache.hadoop.fs.Path(dir)
     val fs = martRoot
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -696,7 +604,8 @@ object SeriesMart {
       // (buckets + spine) is stamped once, after the data commits —
       // a crash in between leaves a stale/absent marker, which the
       // next refresh reads as "rebuild again" (self-healing).
-      writeBucketedMart(buildAll(), dir, buckets.getOrElse(sized()),
+      writeBucketedMart(buildFromCounts(counts, asOf, spineOpt), dir,
+        buckets.getOrElse(HubStore.bucketsFor(spark, listedBytes(counts))),
         spine = spineOpt)
       clearTouchedJournals(fs, dir, readTouchedJournals(fs, dir)._2)
       false
@@ -707,7 +616,6 @@ object SeriesMart {
       case Some((b, s)) if s == spineOpt && buckets.forall(_ == b) => b
       case _ => return fullRebuild()
     }
-    val spine = spineOpt.get
     // Touched documents: the batch's parent-key set as mart keys, plus
     // the keys its claims were previously filed under (`priorKeys`),
     // plus any keys a CRASHED upload journaled before its hub upsert
@@ -724,7 +632,20 @@ object SeriesMart {
     }
     val existing = spark.read.parquet(dir)
     val touchedBuckets = bucketsOf(spark, touchedKeys, n)
-    val rebuilt = buildTouched(touchedKeys, spine)
+    // The rebuild filters on the computed mart key, not per-column
+    // equalities: the key is LOSSY (components may contain the "_"
+    // separator — the fixture's own "PLANT_A"/"CAT2_X" do — and a
+    // Python-str null is the literal "None"), so distinct parent
+    // tuples can share one key. The keep-filter drops existing
+    // documents BY KEY, so the rebuild must regenerate every tuple
+    // colliding into a touched key or the collision partner's document
+    // is lost; only the concat form matches exactly that set. A
+    // touched key with no count rows left (a parent-key move drained
+    // it) yields no document.
+    val rebuilt = buildFromCounts(
+      counts.filter(concat_ws("_", parentKeys.map(pyStr): _*)
+        .isin(touchedKeys.toSeq: _*)),
+      asOf, spineOpt)
     val keep = keepRows(existing, touchedBuckets, touchedKeys)
     val out = graft.Checkpoint.pinTransient(
       keep.unionByName(rebuilt.select(keep.columns.map(col): _*)))
@@ -747,7 +668,7 @@ object SeriesMart {
       clearTouchedJournals(fs, dir, journalFiles)
     } finally graft.Checkpoint.release(out)
     true
-  }
+   }
 
   /** Reference-layout export: one pretty JSON file per key with the
     * sanitized filename (ref: core/storage.py:643-648). Driver-side by

@@ -21,11 +21,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  4. bring the [[SeriesCounts]] store up to date by replacing
   *     exactly the journaled partitions from the merged hub
   *     (partition-pruned, batch-sized — never a full hub pass);
-  *  5. refresh the bucketed mart incrementally FROM THE COUNTS
+  *  5. refresh the bucketed mart incrementally from the counts
   *     ([[SeriesMart.refreshFromCounts]]) — the refresh reads no hub
-  *     rows at all, closing the r10 verdict's last O(hub)-per-upload
-  *     item (including the spine-extending first upload of a month,
-  *     which now reassembles documents from count rows).
+  *     rows, also for the spine-extending first upload of a month,
+  *     which reassembles every document from count rows.
   *
   * Replaying the same batch after a crash at ANY point is idempotent:
   * the upsert's keyed merge converges, the count replacement derives
@@ -42,9 +41,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object UploadFlow {
 
   /** Returns true when the mart refresh took the incremental path
-    * (false = a guard forced the full rebuild; see
-    * [[SeriesMart.refreshFromCounts]] — with the count store the
-    * rebuild is counts-bounded, not a hub rescan).
+    * (false = a guard forced the full, counts-bounded rebuild; see
+    * [[SeriesMart.refreshFromCounts]]).
     *
     * Key-bucket counts: `buckets` (mart) and `hubLayout` (the hub's
     * first write) default to counts sized from the data

@@ -446,33 +446,6 @@ class PlanAuditSpec extends AnyFunSuite {
       s"hub probe must read only the key column, got: $readSchemas")
   }
 
-  test("mart refresh's touched rebuild prunes the hub scan to build's columns") {
-    // The incremental refresh's cost story: the touched-series rebuild
-    // scans the hub ONCE, column-pruned to what the document build
-    // consumes — a 54-column full-width read would make every refresh
-    // an O(hub-bytes) pass regardless of the delta size.
-    val dir = java.nio.file.Files.createTempDirectory("martplan").toString
-    val hub0 = graft.claims.ClaimsEtl.ingestCsv(spark,
-      getClass.getResource("/claims_fixture.csv").getPath)
-    graft.claims.HubStore.write(hub0.drop(
-      graft.claims.ClaimsSchema.ingestSeqCol), dir)
-    val frame = graft.claims.SeriesMart.build(
-      graft.claims.SeriesMart.touchedRows(spark.read.parquet(dir),
-        Set("PLANT_A_CAT2_X_MAJOR_P")), "2024-02-01")
-    frame.collect()
-    val plan = frame.queryExecution.executedPlan.toString
-    val allowed = Set("플랜트", "제품범주2", "대분류", "중분류",
-      "접수일자", "Lag_Valid", "Lag_Days")
-    val readSchemas = "ReadSchema: struct<([^\n]*)>".r
-      .findAllMatchIn(plan).map(_.group(1)).toSeq
-    assert(readSchemas.nonEmpty, plan.take(400))
-    readSchemas.foreach { s =>
-      val fields = s.split(",").map(_.split(":")(0).trim).toSet
-      assert(fields.subsetOf(allowed),
-        s"rebuild scan must be pruned to build's columns, got: $s")
-    }
-  }
-
   test("bucketed hub probe prunes to the batch keys' buckets, key column only") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

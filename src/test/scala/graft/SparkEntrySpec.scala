@@ -11,12 +11,19 @@ import org.scalatest.funsuite.AnyFunSuite
 class SparkEntrySpec extends AnyFunSuite {
 
   test("entry returns rows in a bare default session") {
+    // Every suite shares one JVM: getOrCreate would hand back a session
+    // an earlier suite configured (ANSI off, nanosAsLong), so stop it
+    // first.
+    SparkSession.getActiveSession.foreach(_.stop())
+    SparkSession.getDefaultSession.foreach(_.stop())
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
       spark.sparkContext.setLogLevel("WARN")
+      assert(spark.conf.get("spark.sql.ansi.enabled") == "true",
+        "the session must carry Spark's own defaults")
       assert(SparkEntry.entry(spark).count() > 0)
     } finally spark.stop()
   }

@@ -228,23 +228,6 @@ class HubStoreSpec extends AnyFunSuite {
     assert(cat.map(_._3).sum == 6)
   }
 
-  test("bucketed hub joins on the claim key without a shuffle") {
-    val dir = Files.createTempDirectory("bhub").toString + "/t"
-    HubStore.writeBucketed(ingest(), "bucketed_hub", dir, buckets = 4)
-    val t = spark.table("bucketed_hub")
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = t.alias("a").join(t.alias("b"), "상담번호")
-      joined.collect() // force final AQE plan
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), plan.take(500))
-      assert(!plan.contains("Exchange"),
-        s"bucketed join should not shuffle:\n${plan.take(800)}")
-    } finally
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-  }
-
   test("merge is idempotent for identical batches") {
     val a = ingest()
     val merged = HubStore.merge(a, a)

@@ -162,9 +162,6 @@ class MaintenanceLeaseSpec extends AnyFunSuite {
     MaintenanceLease.acquire(fs, martMarker, "live-flow",
       MaintenanceLease.defaultTtlMs)
     intercept[IllegalStateException] {
-      SeriesMart.refreshIncremental(hub, fixture, "2024-03-01", martDir)
-    }
-    intercept[IllegalStateException] {
       SeriesMart.refreshFromCounts(spark,
         SeriesCounts.read(spark, countsDir), fixture, "2024-03-01", martDir)
     }

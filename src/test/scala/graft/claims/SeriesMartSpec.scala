@@ -1,6 +1,6 @@
 package graft.claims
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -92,6 +92,15 @@ class SeriesMartSpec extends AnyFunSuite {
     spark.read.parquet(dir).drop("key_bucket")
       .toJSON.collect().toSet
 
+  /** The mart refresh over a hub held in memory: the count store that
+    * hub maintains is `SeriesCounts.aggregate(hub)`.
+    */
+  private def refresh(hub: DataFrame, batch: DataFrame, asOf: String,
+      dir: String, buckets: Option[Int] = None,
+      priorKeys: Set[String] = Set.empty): Boolean =
+    SeriesMart.refreshFromCounts(spark, SeriesCounts.aggregate(hub), batch,
+      asOf, dir, buckets, priorKeys)
+
   private def parquetListing(dir: String): Map[String, (Long, Long)] = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
@@ -109,7 +118,7 @@ class SeriesMartSpec extends AnyFunSuite {
     // First call: no mart yet → full build (returns false). 64 buckets
     // (the fixture alone would size to one) so the two documents land
     // in different buckets.
-    assert(!SeriesMart.refreshIncremental(hub0, hub0, "2024-02-01", dir,
+    assert(!refresh(hub0, hub0, "2024-02-01", dir,
       buckets = Some(64)))
     val before = parquetListing(dir)
     // Batch inside the existing 2023-10..2024-01 spine, touching only
@@ -122,7 +131,7 @@ class SeriesMartSpec extends AnyFunSuite {
     val hub1 = hub0.drop(ClaimsSchema.ingestSeqCol)
       .unionByName(batch.drop(ClaimsSchema.ingestSeqCol))
     Thread.sleep(1100) // mtime resolution guard
-    assert(SeriesMart.refreshIncremental(hub1, batch, "2024-03-01", dir,
+    assert(refresh(hub1, batch, "2024-03-01", dir,
       buckets = Some(64)), "same-spine batch must take the incremental path")
     // Ground truth: the full rebuild over the same merged hub. The
     // one LEGITIMATE divergence is meta.last_updated — an untouched
@@ -183,8 +192,8 @@ class SeriesMartSpec extends AnyFunSuite {
     // WITHOUT priorKeys the old document is left permanently stale —
     // the bug the parameter exists to close.
     val dirStale = java.nio.file.Files.createTempDirectory("martmv0").toString
-    assert(!SeriesMart.refreshIncremental(hub0, hub0, "2024-02-01", dirStale))
-    assert(SeriesMart.refreshIncremental(hub1, batch, "2024-03-01", dirStale))
+    assert(!refresh(hub0, hub0, "2024-02-01", dirStale))
+    assert(refresh(hub1, batch, "2024-03-01", dirStale))
     val staleA = spark.read.parquet(dirStale)
       .filter(col("key") === "PLANT_A_CAT2_X_MAJOR_P")
       .select(element_at(col("data.history"), 2).getField("count")).collect()
@@ -193,8 +202,8 @@ class SeriesMartSpec extends AnyFunSuite {
 
     // WITH priorKeys the refresh equals the full rebuild.
     val dir = java.nio.file.Files.createTempDirectory("martmv1").toString
-    assert(!SeriesMart.refreshIncremental(hub0, hub0, "2024-02-01", dir))
-    assert(SeriesMart.refreshIncremental(hub1, batch, "2024-03-01", dir,
+    assert(!refresh(hub0, hub0, "2024-02-01", dir))
+    assert(refresh(hub1, batch, "2024-03-01", dir,
       priorKeys = priors))
     assert(martDocs(dir) ==
       SeriesMart.build(hub1, "2024-03-01").toJSON.collect().toSet,
@@ -213,10 +222,10 @@ class SeriesMartSpec extends AnyFunSuite {
       ("C004", "2023", "11", "16", "PLANT_B", "CAT2_Y", "MAJOR_S")))
     val hub1 = mergeHub(hub0, batch)
     val dir = java.nio.file.Files.createTempDirectory("martdrain").toString
-    assert(!SeriesMart.refreshIncremental(hub0, hub0, "2024-02-01", dir,
+    assert(!refresh(hub0, hub0, "2024-02-01", dir,
       buckets = Some(64)))
     val priors = SeriesMart.priorParentKeys(hub0, batch)
-    assert(SeriesMart.refreshIncremental(hub1, batch, "2024-03-01", dir,
+    assert(refresh(hub1, batch, "2024-03-01", dir,
       buckets = Some(64), priorKeys = priors))
     assert(martDocs(dir) ==
       SeriesMart.build(hub1, "2024-03-01").toJSON.collect().toSet)
@@ -237,7 +246,7 @@ class SeriesMartSpec extends AnyFunSuite {
       ("C003", "2023", "11", "15", "PLANT_B", "CAT2_Y", "MAJOR_S")))
     val hub1 = mergeHub(hub0, batch)
     val dir = java.nio.file.Files.createTempDirectory("martcrash").toString
-    assert(!SeriesMart.refreshIncremental(hub0, hub0, "2024-02-01", dir))
+    assert(!refresh(hub0, hub0, "2024-02-01", dir))
     // The upload flow: journal the pre-upsert parent keys, commit the
     // hub... then CRASH before the refresh runs. The retry re-probes
     // the MERGED hub, where C003 is already filed under PLANT_B — so
@@ -245,7 +254,7 @@ class SeriesMartSpec extends AnyFunSuite {
     // the PLANT_A document changed.
     SeriesMart.journalTouchedKeys(spark, dir,
       SeriesMart.priorParentKeys(hub0, batch))
-    assert(SeriesMart.refreshIncremental(hub1, batch, "2024-03-01", dir),
+    assert(refresh(hub1, batch, "2024-03-01", dir),
       "the retry takes the incremental path")
     assert(martDocs(dir) ==
       SeriesMart.build(hub1, "2024-03-01").toJSON.collect().toSet,
@@ -294,9 +303,9 @@ class SeriesMartSpec extends AnyFunSuite {
     // Layout written with 64 buckets; a refresh asking for 8 would
     // union two hash layouts — must fall back to the full rebuild.
     val dir = java.nio.file.Files.createTempDirectory("martbkt").toString
-    assert(!SeriesMart.refreshIncremental(hub0, hub0, "2024-02-01", dir,
+    assert(!refresh(hub0, hub0, "2024-02-01", dir,
       buckets = Some(64)))
-    assert(!SeriesMart.refreshIncremental(hub1, batch, "2024-03-01", dir,
+    assert(!refresh(hub1, batch, "2024-03-01", dir,
       buckets = Some(8)), "bucket-count drift must force the full-rebuild path")
     assert(martDocs(dir) ==
       SeriesMart.build(hub1, "2024-03-01").toJSON.collect().toSet)
@@ -306,9 +315,9 @@ class SeriesMartSpec extends AnyFunSuite {
     val dir2 = java.nio.file.Files.createTempDirectory("martmeta").toString
     SeriesMart.writeBucketedMart(SeriesMart.build(hub0, "2024-02-01"), dir2,
       buckets = 64)
-    assert(!SeriesMart.refreshIncremental(hub1, batch, "2024-03-01", dir2),
+    assert(!refresh(hub1, batch, "2024-03-01", dir2),
       "meta-less layout must force the full-rebuild path")
-    assert(SeriesMart.refreshIncremental(hub1, batch, "2024-04-01", dir2),
+    assert(refresh(hub1, batch, "2024-04-01", dir2),
       "the rebuild self-heals: the next same-spine refresh is incremental")
   }
 
@@ -317,6 +326,10 @@ class SeriesMartSpec extends AnyFunSuite {
     // 36k rows, 1500 parent series over a fixed 24-month spine — the
     // 100 TB posture in miniature: an upload touching ONE series must
     // cost one bucket rewrite + one delta rebuild, not O(mart).
+    // The count store keeps the hub's 접수년/접수월 partitioning.
+    def withPartitionCols(df: DataFrame): DataFrame = df
+      .withColumn("접수년", year(col("접수일자")))
+      .withColumn("접수월", month(col("접수일자")))
     def syntheticHub(n: Long): org.apache.spark.sql.DataFrame =
       spark.range(n).select(
         concat(lit("P"), (col("id") % 500).cast("string")).as("플랜트"),
@@ -328,9 +341,10 @@ class SeriesMartSpec extends AnyFunSuite {
           .as("접수일자"),
         (col("id") % 3 =!= 0).as("Lag_Valid"),
         (col("id") % 30).cast("int").as("Lag_Days"))
+        .transform(withPartitionCols)
     val hub = syntheticHub(36000)
     val dir = java.nio.file.Files.createTempDirectory("martscale").toString
-    assert(!SeriesMart.refreshIncremental(hub, hub, "2024-01-01", dir,
+    assert(!refresh(hub, hub, "2024-01-01", dir,
       buckets = Some(64)))
     val docs0 = spark.read.parquet(dir)
     assert(docs0.count() == 1500)
@@ -341,9 +355,10 @@ class SeriesMartSpec extends AnyFunSuite {
       .toDF("플랜트", "제품범주2", "대분류", "중분류", "접수일자",
         "Lag_Valid", "Lag_Days")
       .withColumn("접수일자", to_date(col("접수일자")))
+      .transform(withPartitionCols)
     val hub2 = hub.unionByName(batch)
     Thread.sleep(1100) // mtime resolution guard
-    assert(SeriesMart.refreshIncremental(hub2, batch, "2024-02-01", dir,
+    assert(refresh(hub2, batch, "2024-02-01", dir,
       buckets = Some(64)),
       "a same-spine single-series batch must take the incremental path")
 
@@ -433,12 +448,42 @@ class SeriesMartSpec extends AnyFunSuite {
     }
   }
 
+  test("a zero bucket count is refused, and a zero marker counts as none") {
+    val hub0 = ClaimsEtl.ingestCsv(spark,
+      getClass.getResource("/claims_fixture.csv").getPath)
+    val dir = java.nio.file.Files.createTempDirectory("martzero").toString
+    // pmod by 0 is NULL: every document would land in the HIVE default
+    // partition under a marker claiming zero buckets.
+    intercept[IllegalArgumentException] {
+      SeriesMart.writeBucketedMart(SeriesMart.build(hub0, "2024-02-01"),
+        dir, buckets = 0)
+    }
+    assert(!refresh(hub0, hub0, "2024-02-01", dir))
+    // Plant a zero count beside the mart's true spine, so only the
+    // count is wrong.
+    val root = new org.apache.hadoop.fs.Path(dir)
+    DeleteJournal.writeMarkerAtomic(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root,
+      SeriesMart.martMetaFile, "buckets=0\nlo=2023-10\nhi=2024-01\n")
+    val key = "PLANT_A_CAT2_X_MAJOR_P"
+    assert(SeriesMart.readDocument(spark, dir, key).count() == 1,
+      "a zero-count marker degrades the lookup to a key-filtered scan")
+    val batch = mkBatch(Seq(
+      ("C900", "2023", "12", "5", "PLANT_A", "CAT2_X", "MAJOR_P")))
+    val hub1 = mergeHub(hub0, batch)
+    assert(!refresh(hub1, batch, "2024-03-01", dir),
+      "a zero-count marker must force the full-rebuild path")
+    assert(martDocs(dir) ==
+      SeriesMart.build(hub1, "2024-03-01").toJSON.collect().toSet)
+    assert(SeriesMart.readDocument(spark, dir, key).count() == 1)
+  }
+
   test("a spine-extending batch forces the guarded full rebuild") {
     import spark.implicits._
     val hub0 = ClaimsEtl.ingestCsv(spark,
       getClass.getResource("/claims_fixture.csv").getPath)
     val dir = java.nio.file.Files.createTempDirectory("martinc2").toString
-    assert(!SeriesMart.refreshIncremental(hub0, hub0, "2024-02-01", dir))
+    assert(!refresh(hub0, hub0, "2024-02-01", dir))
     // 2024-05 extends the global spine: every document's zero-filled
     // history grows, so the incremental path would corrupt untouched
     // docs — the guard must run the full rebuild instead.
@@ -449,7 +494,7 @@ class SeriesMartSpec extends AnyFunSuite {
           "제품범주2", "대분류"))))
     val hub1 = hub0.drop(ClaimsSchema.ingestSeqCol)
       .unionByName(batch.drop(ClaimsSchema.ingestSeqCol))
-    assert(!SeriesMart.refreshIncremental(hub1, batch, "2024-06-01", dir),
+    assert(!refresh(hub1, batch, "2024-06-01", dir),
       "spine change must force the full-rebuild path")
     assert(martDocs(dir) ==
       SeriesMart.build(hub1, "2024-06-01").toJSON.collect().toSet)
