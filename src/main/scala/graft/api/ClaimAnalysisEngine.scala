@@ -58,10 +58,10 @@ final class ClaimAnalysisEngine(spark: SparkSession, hubPath: String,
     * regeneration), with the series step INCREMENTAL: only the parent
     * documents the batch touches are rebuilt in the bucketed mart at
     * `martDir`, including documents the batch's claims are moving AWAY
-    * from (the pre-upsert [[SeriesMart.priorParentKeys]] probe — run
-    * before the hub changes, or the old locations are unknowable —
-    * journaled durably so a crashed upload's retry still regenerates
-    * the vacated documents; see [[graft.claims.UploadFlow]]).
+    * from (their pre-upsert mart keys, collected by the upsert's own
+    * probe before the hub changes, or the old locations are
+    * unknowable — journaled durably so a crashed upload's retry still
+    * regenerates the vacated documents; see [[graft.claims.UploadFlow]]).
     * Returns true when the incremental path ran, false when a guard
     * (first build, spine growth, layout drift) forced the full rebuild
     * — the reference's only behavior ([[generateNestedSeries]] remains
@@ -89,8 +89,8 @@ final class ClaimAnalysisEngine(spark: SparkSession, hubPath: String,
 
   def generateNestedSeries(asOf: LocalDate): Long = {
     // One build: unpinned, the write and the count each re-executed
-    // the whole multi-join mart DAG (two hub scans, two fill
-    // cross-joins).
+    // the whole mart DAG (the hub scan, the row aggregation and both
+    // assembly aggregations).
     val mart = graft.Checkpoint.pin(SeriesMart.build(loadHub(), asOf.toString))
     SeriesMart.writeJsonDataset(mart, seriesPath)
     mart.count()

@@ -1,7 +1,6 @@
 package graft.claims
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Partitioned-parquet claims hub with upsert-by-key merge
@@ -91,6 +90,12 @@ object HubStore {
     * replaying the journal against the merged hub. A throwing callback
     * aborts the upsert with the hub untouched.
     *
+    * `keyProbe`: a caller key over claim rows (the mart key, for
+    * [[UploadFlow]]) that the probe collects alongside the partition
+    * tuples, so the caller learns which of its keys the upsert touches
+    * without scanning the hub itself. Its hook runs after
+    * `onAffected`, before the commit; see [[KeyProbe]].
+    *
     * `firstWrite`: the layout created when the path holds no hub yet.
     * [[Bucketed]] creates the key-hash bucketed layout
     * ([[writeBucketedHub]]) — how [[UploadFlow]] makes bucketed the
@@ -101,13 +106,16 @@ object HubStore {
     */
   def upsert(spark: SparkSession, incoming: DataFrame, path: String,
       onAffected: Set[Seq[Int]] => Unit = _ => (),
-      firstWrite: FirstWrite = Flat): Unit =
+      firstWrite: FirstWrite = Flat,
+      keyProbe: Option[KeyProbe] = None): Unit =
    // Leased on the hub path (round-12 self-review): every other
    // maintenance verb serializes against a running UploadFlow, but a
    // DIRECT upsert caller could still interleave with the flow's
    // journal heal/sweep on the same hub silently. The flow itself
    // (which takes the hub lease up front) re-enters.
    MaintenanceLease.withLease(spark, path) {
+    // Without a caller key the probes carry a null one: same jobs.
+    val probeKey = keyProbe.fold(lit(null).cast("string"))(_.key)
     if (exists(spark, path)) {
       // PARTITION-SCOPED rewrite. The correctness hazard (reproduced in
       // the round-9 review) is a keyed update MOVING a claim across
@@ -120,8 +128,9 @@ object HubStore {
       // rewriting, and that set is knowable up front:
       //   oldParts — partitions currently holding any incoming claim
       //     key (these may shrink or vacate), found by a broadcast
-      //     semi-join that Catalyst prunes to (key, partition cols) —
-      //     a one-column-ish scan, not a full-width read;
+      //     semi-join that Catalyst prunes to (key, partition cols,
+      //     and the columns of a `keyProbe` key) — a narrow scan, not
+      //     a full-width read;
       //   newParts — partitions the prepped incoming rows land in
       //     (these gain or replace rows).
       // Rows outside oldParts ∪ newParts have keys absent from the
@@ -172,17 +181,18 @@ object HubStore {
             s"$hubMetaFile ${if (hubBuckets.isDefined) "present" else "absent"}" +
             " — a writeBucketedHub crashed mid-write; re-run " +
             "writeBucketedHub on this path to restore the layout")
-      // The batch is consumed by FOUR jobs below (key probe, null-key
-      // probe, target-partition listing, the merge itself); a caller's
-      // lineage often carries a shuffle (preprocess keyed dedup), so
-      // pin the delta-sized frame once instead of recomputing it per
-      // job. TRANSIENT pin: the frame lives only inside this call, so
-      // the session's reliable policy would write a permanent batch
-      // copy per upsert for no HA gain (the caller's retry re-runs
-      // the call). A caller that already pinned (UploadFlow holds the
-      // batch across probe+upsert+refresh) is respected: no second
-      // block copy, and the finally must NOT release a frame this
-      // call does not own — the caller still reads it after we return.
+      // The batch is consumed by THREE jobs below (the new-side probe,
+      // the old-side probe's broadcast key set, the merge itself); a
+      // caller's lineage often carries a shuffle (preprocess keyed
+      // dedup), so pin the delta-sized frame once instead of
+      // recomputing it per job. TRANSIENT pin: the frame lives only
+      // inside this call, so the session's reliable policy would write
+      // a permanent batch copy per upsert for no HA gain (the caller's
+      // retry re-runs the call). A caller that already pinned
+      // (UploadFlow pins the batch for the whole upsert) is
+      // respected: no second block copy, and the finally must NOT
+      // release a frame this call does not own — the caller still
+      // reads it after we return.
       val callerPinned = graft.Checkpoint.isPinned(incoming)
       val inc =
         if (callerPinned) incoming
@@ -197,37 +207,24 @@ object HubStore {
       try {
         val incPrepped = hubBuckets.foldLeft(prepPartitionCols(inc))(
           (df, b) => withBucketCol(df, b))
-        val partCols = layoutCols.map(col)
-        // Partition values read back as strings when a caller session
-        // disables partitionColumnTypeInference — cast in the plan so
-        // the probe is conf-independent instead of crashing on getInt.
-        def partSet(df: DataFrame): Set[Seq[Int]] =
-          df.select(partCols.map(_.cast("int")): _*).distinct().collect()
-            .map(r => layoutCols.indices.map(r.getInt)).toSet
-        // Null keys never match an equality semi-join, but the merge's
-        // groupBy collapses ALL null-key rows it sees (SQL null
-        // grouping) into one winner. The full-rewrite semantics this
-        // scoped form must reproduce collapse hub-wide null-key rows
-        // on EVERY upsert — if only the null rows inside the keyed
-        // affected set joined the merge, multiplicity would depend on
-        // which unrelated partition a batch happened to touch. So the
-        // hub's null-key partitions are ALWAYS part of the scope (a
-        // narrow key-column probe — for the bucketed layout that probe
-        // is partition-pruned to the null sentinel bucket; empty for
-        // the common hub whose ingest filters null keys — P2).
+        // newParts — the partitions the prepped incoming rows land in
+        // (these gain or replace rows) — with the caller's key. On the
+        // bucketed layout the tuples also name the batch keys' buckets
+        // (the SAME expression the writer uses), which prune the
+        // old-side probe: no separate bucket-set job.
+        val newRows = collectPartKeys(incPrepped, layoutCols, probeKey)
+        val newParts = newRows.map(_._1).toSet
         val keys = inc.filter(col(keyCol).isNotNull)
           .select(col(keyCol)).distinct()
-        val oldLoc = oldLocationsFor(hub, keys, hubBuckets)
-        val nullKeyRows = hubBuckets match {
-          // Bucketed: null keys live ONLY in the sentinel bucket —
-          // a partition filter, no key-column scan at all.
-          case Some(_) => hub.filter(col(bucketPartCol) === nullBucket)
-          case None => hub.filter(col(keyCol).isNull)
-        }
-        val oldParts = partSet(oldLoc.unionByName(nullKeyRows))
-        val newParts = partSet(incPrepped)
+        val oldRows = collectPartKeys(
+          oldLocationRows(hub, keys, hubBuckets.map(_ =>
+            newParts.map(_.last.toLong) - nullBucket.toLong)),
+          layoutCols, probeKey)
+        val oldParts = oldRows.map(_._1).toSet
         val affected = oldParts ++ newParts
         onAffected(affected)
+        keyProbe.foreach(_.onKeys(oldRows.map(_._2).toSet,
+          newRows.map(_._2).toSet))
         val affectedPred = partitionPredicate(affected, layoutCols)
         // The merged frame is pinned ([[graft.Checkpoint.pin]], the
         // session policy: under a reliable session a mid-write executor
@@ -248,7 +245,9 @@ object HubStore {
         // Vacated partitions: affected but with no surviving merged
         // rows (dynamic overwrite never visits them). Known BEFORE the
         // write.
-        val vacated = (affected -- partSet(m)).toSeq
+        val surviving = collectPartKeys(m, layoutCols, lit(null).cast("string"))
+          .map(_._1)
+        val vacated = (affected -- surviving).toSeq
           .map(vs => layoutCols.zip(vs)
             .map { case (c, v) => s"$c=$v" }.mkString("/"))
         m.write
@@ -266,17 +265,22 @@ object HubStore {
       // being created) — the callback still fires so count maintenance
       // sees the initial load through the same channel as every
       // incremental one. The same collect carries each month's row
-      // count, which sizes a bucketed layout without another job.
+      // count, which sizes a bucketed layout without another job, and
+      // the caller's key (there are no prior keys: no hub yet).
       val rows = incoming.drop(ingestSeqCol)
-      val monthRows = prepPartitionCols(rows)
-        .groupBy(partitionCols.map(c => col(c).cast("int")): _*).count()
-        .collect()
-      onAffected(monthRows
-        .map(r => partitionCols.indices.map(r.getInt)).toSet)
+      val monthKeys = prepPartitionCols(rows)
+        .groupBy(partitionCols.map(c => col(c).cast("int")) :+
+          probeKey.as("__key"): _*)
+        .count().collect()
+      val monthRows = monthKeys.groupMapReduce[Seq[Int], Long](
+        r => partitionCols.indices.map(r.getInt))(
+        _.getLong(partitionCols.size + 1))(_ + _)
+      onAffected(monthRows.keySet)
+      keyProbe.foreach(_.onKeys(Set.empty,
+        monthKeys.map(_.getString(partitionCols.size)).toSet))
       firstWrite match {
         case Bucketed(b) =>
-          val largestMonth = monthRows
-            .map(_.getLong(partitionCols.size)).maxOption.getOrElse(0L)
+          val largestMonth = monthRows.values.maxOption.getOrElse(0L)
           writeBucketedHub(rows, path, b.getOrElse(bucketsFor(spark,
             largestMonth * rows.schema.defaultSize)))
         case Flat => write(rows, path)
@@ -498,20 +502,17 @@ object HubStore {
     DeleteJournal.readMarker(fs, root, hubMetaFile).get("buckets")
       .flatMap(_.toIntOption).filter(_ > 0)
 
-  /** Bucket-pruned old-locations probe: the batch keys' bucket set is
-    * batch-sized (computed with the SAME xxhash64 expression the
-    * writer uses), and the `isin` lands on the partition column — the
-    * scan visits only those buckets' files, reading the key column
-    * alone (PlanAuditSpec pins both prunings).
+  /** Bucket-pruned old-locations probe: `bucketSet` holds the batch
+    * keys' buckets (by the SAME xxhash64 expression the writer uses —
+    * [[upsert]] reads them off its own new-side probe), and the `isin`
+    * lands on the partition column — the scan visits only those
+    * buckets' files, reading the key column alone (PlanAuditSpec pins
+    * both prunings).
     */
   private[graft] def oldLocationsBucketed(hub: DataFrame, keys: DataFrame,
-      buckets: Int): DataFrame = {
-    val bucketSet = keys
-      .select(pmod(xxhash64(col(keyCol)), lit(buckets)).as("b"))
-      .distinct().collect().map(_.getLong(0))
-    hub.filter(col(bucketPartCol).isin(bucketSet: _*))
+      bucketSet: Set[Long]): DataFrame =
+    hub.filter(col(bucketPartCol).isin(bucketSet.toSeq.sorted: _*))
       .join(broadcast(keys), Seq(keyCol), "left_semi")
-  }
 
   /** The affected-partition probe: hub rows currently holding any
     * incoming claim key. Downstream only the partition columns are
@@ -523,15 +524,52 @@ object HubStore {
   private[graft] def oldLocations(hub: DataFrame, keys: DataFrame): DataFrame =
     hub.join(broadcast(keys), Seq(keyCol), "left_semi")
 
-  /** The old-locations probe the hub's layout allows: bucket-pruned
-    * ([[oldLocationsBucketed]]) when `buckets` is the count its marker
-    * records ([[readHubMeta]]), the flat key-column semi-join
-    * ([[oldLocations]]) when it has none. [[upsert]] and
-    * [[SeriesMart.priorParentKeys]] both probe through here.
+  /** The hub rows [[upsert]]'s merge reads back for a batch, as far as
+    * the probe needs them: the old locations of the batch `keys`
+    * (bucket-pruned by `bucketSet` on a bucketed hub, the flat
+    * key-column semi-join otherwise) plus the null-key rows.
+    *
+    * Null keys never match an equality semi-join, but the merge's
+    * groupBy collapses ALL null-key rows it sees (SQL null grouping)
+    * into one winner. The full-rewrite semantics the scoped upsert
+    * must reproduce collapse hub-wide null-key rows on EVERY upsert —
+    * if only the null rows inside the keyed affected set joined the
+    * merge, multiplicity would depend on which unrelated partition a
+    * batch happened to touch. So the hub's null-key partitions are
+    * ALWAYS part of the scope: on the bucketed layout a partition
+    * filter on the null sentinel bucket, on the flat one a narrow
+    * key-column probe (empty for the common hub whose ingest filters
+    * null keys — P2).
     */
-  private[claims] def oldLocationsFor(hub: DataFrame, keys: DataFrame,
-      buckets: Option[Int]): DataFrame =
-    buckets.fold(oldLocations(hub, keys))(oldLocationsBucketed(hub, keys, _))
+  private[graft] def oldLocationRows(hub: DataFrame, keys: DataFrame,
+      bucketSet: Option[Set[Long]]): DataFrame = bucketSet match {
+    case Some(bs) => oldLocationsBucketed(hub, keys, bs)
+      .unionByName(hub.filter(col(bucketPartCol) === nullBucket))
+    case None => oldLocations(hub, keys)
+      .unionByName(hub.filter(col(keyCol).isNull))
+  }
+
+  /** A caller's key over claim rows, reported by [[upsert]] before it
+    * commits: `onKeys(prior, touched)` receives the keys of the hub
+    * rows the merge reads back ([[oldLocationRows]] — where the
+    * batch's claims are filed now, plus the null-key rows) and the
+    * keys of the batch rows. Both come out of the probe collects the
+    * upsert runs anyway, so [[HubStore]] stays ignorant of what the
+    * key means.
+    */
+  final case class KeyProbe(key: Column,
+      onKeys: (Set[String], Set[String]) => Unit)
+
+  /** Distinct (layout tuple, `key`) pairs of `df`, collected. Partition
+    * values read back as strings when a caller session disables
+    * partitionColumnTypeInference — cast in the plan so the probe is
+    * conf-independent instead of crashing on getInt.
+    */
+  private def collectPartKeys(df: DataFrame, layoutCols: Seq[String],
+      key: Column): Seq[(Seq[Int], String)] =
+    df.select(layoutCols.map(c => col(c).cast("int")) :+ key.as("__key"): _*)
+      .distinct().collect().toSeq
+      .map(r => (layoutCols.indices.map(r.getInt), r.getString(layoutCols.size)))
 
   /** Journal of vacated-partition deletes in flight ([[DeleteJournal]])
     * — written only AFTER the merged overwrite commits, so every dir it

@@ -3,6 +3,7 @@ package graft.claims
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 /** Child-grain monthly count store — the maintained aggregate that
   * makes mart refresh O(delta) instead of O(hub) (the reference
@@ -50,6 +51,16 @@ object SeriesCounts {
   private[claims] val grainCols =
     Seq("플랜트", "제품범주2", "대분류", "중분류")
 
+  /** The store's schema as a read sees it: the [[aggregate]] columns,
+    * with the partition columns last, where the parquet reader puts
+    * them. Fixed by [[aggregate]] (grain cast to string), so [[read]]
+    * passes it instead of paying a schema-inference job.
+    */
+  private[claims] val schema: StructType = StructType(
+    (grainCols :+ "ym").map(StructField(_, StringType)) ++
+      Seq("n_all", "n_valid", "sum_lag").map(StructField(_, LongType)) ++
+      partitionCols.map(StructField(_, IntegerType)))
+
   /** Store-valid marker: stamped after a full [[rebuild]] commits.
     * Absence means unmaintained/foreign state — consumers rebuild.
     */
@@ -89,12 +100,14 @@ object SeriesCounts {
 
   /** The count rows for a claims frame — exact, one narrow aggregation
     * (Catalyst prunes the input scan to grain + the three lag/date
-    * inputs). Input must be preprocessed (ClaimsEtl) claims.
+    * inputs). Input must be preprocessed (ClaimsEtl) claims, whose
+    * grain columns are already strings (the cast is then a no-op).
     */
   def aggregate(claims: DataFrame): DataFrame =
     HubStore.prepPartitionCols(claims)
       .withColumn("ym", date_format(col(receiptDateCol), "yyyy-MM"))
-      .groupBy((partitionCols ++ grainCols :+ "ym").map(col): _*)
+      .groupBy(partitionCols.map(col) ++
+        grainCols.map(c => col(c).cast("string").as(c)) :+ col("ym"): _*)
       .agg(
         count(lit(1)).as("n_all"),
         sum(when(col(lagValidCol), 1L).otherwise(0L)).as("n_valid"),
@@ -143,7 +156,7 @@ object SeriesCounts {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     DeleteJournal.heal(fs, root, pendingDeletesFile)
-    spark.read.parquet(dir)
+    spark.read.schema(schema).parquet(dir)
   }
 
   /** Durably record partitions an in-flight upsert is about to change

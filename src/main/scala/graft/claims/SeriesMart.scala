@@ -1,9 +1,11 @@
 package graft.claims
 
+import java.time.YearMonth
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StructType}
 
 /** Nested time-series datamart: one document per (플랜트, 제품범주2,
   * 대분류) with a zero-filled monthly history, per-중분류 children, and
@@ -20,9 +22,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, St
   *  - JSON `key` joins raw values with Python str() semantics (null →
   *    "None"); filenames sanitize `[\/:*?"<>|]` → "-" with null → ""
   *
-  * Scale shape: two aggregations (child-grain counts, then struct
-  * assembly) — the hub scan reduces to (#keys × #months) rows before
-  * any document is built; documents are bounded by months × children.
+  * Scale shape: the global spine bounds are collected first (a 1-row
+  * aggregate, skipped when the caller already holds them), then every
+  * document comes from two aggregations over that driver-literal
+  * spine — child grain (counts collected per key, zero-filled by a
+  * `transform`), then parent grain (children sorted, parent series
+  * summed element-wise) — with no join and no (#keys × #months) grid
+  * materialized; documents are bounded by months × children.
   * The mart itself is written as a partitioned JSON dataset (file-per-
   * key is a driver-side export kept for reference-layout compatibility;
   * at 100 TB key cardinality the dataset form is the real sink).
@@ -72,62 +78,52 @@ object SeriesMart {
     regexp_replace(coalesce(col(c).cast("string"), lit("")),
       "[\\\\/:*?\"<>|]", "-")
 
-  /** USING-style join with NULL-SAFE key equality: the grouped sides
-    * keep null-key groups, and ClaimsEtl canonicalization produces
-    * null keys for ANY column missing from an upload — a plain
-    * equi-join silently dropped those keys' entire histories (the
-    * joinBackByKey / twoLevelRank null-key convention, applied here
-    * in round 9).
+  private val childCols = parentKeys :+ childKey
+
+  /** The mart key of a row: the parent components joined with "_",
+    * Python-str style (lossy — see [[refreshFromCounts]]).
     */
-  private def joinNullSafe(left: DataFrame, right: DataFrame,
-      cols: Seq[String], how: String): DataFrame = {
-    val renamed = cols.foldLeft(right)(
-      (acc, c) => acc.withColumnRenamed(c, s"__r_$c"))
-    val cond = cols.map(c => col(c) <=> col(s"__r_$c"))
-      .reduce[org.apache.spark.sql.Column](_ && _)
-    left.join(renamed, cond, how).drop(cols.map(c => s"__r_$c"): _*)
+  private[graft] val martKey: Column =
+    concat_ws("_", parentKeys.map(pyStr): _*)
+
+  /** Global month spine bounds: min→max `ym` over the dated rows of
+    * `df`, None when no row is dated. Each input partition reports its
+    * own bounds and the driver reduces them: one job, where a global
+    * aggregate adds a single-partition exchange and so a second job.
+    */
+  private def spineOf(df: DataFrame): Option[(String, String)] = {
+    import df.sparkSession.implicits._
+    val bounds = df.filter(col("ym").isNotNull).select(col("ym")).as[String]
+      .mapPartitions(_.foldLeft(Option.empty[(String, String)]) {
+        case (None, m) => Some((m, m))
+        case (Some((lo, hi)), m) =>
+          Some((if (m < lo) m else lo, if (m > hi) m else hi))
+      }.iterator)
+      .collect()
+    if (bounds.isEmpty) None
+    else Some((bounds.map(_._1).min, bounds.map(_._2).max))
   }
 
   /** Build the mart as a DataFrame of nested documents. `asOf` stands in
-    * for the reference's wall-clock `last_updated`.
+    * for the reference's wall-clock `last_updated`. Collects the global
+    * spine bounds (one job) before assembling.
     */
-  def build(claims: DataFrame, asOf: String,
-      spine: Option[(String, String)] = None): DataFrame = {
-    val base = claims.withColumn("ym",
+  def build(claims: DataFrame, asOf: String): DataFrame = {
+    val rows = claims.withColumn("ym",
       date_format(col(ClaimsSchema.receiptDateCol), "yyyy-MM"))
-
-    // global month spine (dated rows only). `spine` overrides the
-    // bounds: documents built for a SUBSET of keys must span the same
-    // global months as every other document.
-    val bounds = spine match {
-      case Some((lo, hi)) =>
-        val s = claims.sparkSession
-        import s.implicits._
-        Seq((lo, hi)).toDF("lo", "hi")
-      case None => base.filter(col("ym").isNotNull)
-        .agg(min("ym").as("lo"), max("ym").as("hi"))
-    }
-
-    // child-grain monthly counts (all rows + Lag_Valid-only)
-    val childCols = parentKeys :+ childKey
-    val counts = base.filter(col("ym").isNotNull)
+    val valid = col(ClaimsSchema.lagValidCol)
+    val lag = col(ClaimsSchema.lagDaysCol)
+    // Child-grain monthly counts over ALL rows, undated ones included
+    // (a key whose rows are all undated still yields an all-zero
+    // history, as in the ref, and its lags still count). `n_lag` is
+    // avg(when(valid, lag))'s own denominator: valid rows with a lag.
+    val grain = rows
       .groupBy((childCols :+ "ym").map(col): _*)
       .agg(count(lit(1)).as("n_all"),
-        sum(when(col(ClaimsSchema.lagValidCol), 1L).otherwise(0L)).as("n_valid"))
-
-    // every (child key × month) — keys from ALL rows (a key whose rows
-    // are all undated still yields an all-zero history, as in the ref)
-    val keys = claims.select(childCols.map(col): _*).distinct()
-
-    // per-child / per-parent lag stats
-    val childLags = claims.groupBy(childCols.map(col): _*)
-      .agg(avg(when(col(ClaimsSchema.lagValidCol),
-        col(ClaimsSchema.lagDaysCol))).as("avg_lag"))
-    val parentLags = claims.groupBy(parentKeys.map(col): _*)
-      .agg(avg(when(col(ClaimsSchema.lagValidCol),
-        col(ClaimsSchema.lagDaysCol))).as("avg_lag"))
-
-    assemble(fillMonths(bounds, keys, counts), childLags, parentLags, asOf)
+        sum(when(valid, 1L).otherwise(0L)).as("n_valid"),
+        sum(when(valid, lag.cast("long"))).as("sum_lag"),
+        count(when(valid, lag)).as("n_lag"))
+    assemble(grain, spineOf(rows), asOf)
   }
 
   /** Document assembly from the maintained count store instead of hub
@@ -137,116 +133,84 @@ object SeriesMart {
     * sums either way, and `sum_lag / n_valid` reproduces Spark's
     * avg(when(valid, lag)) exactly because Lag_Days is an int (both
     * sides sum exactly-representable doubles, then divide once).
+    * Without a `spine` the bounds are collected from the count rows
+    * (one job).
     */
   def buildFromCounts(countRows: DataFrame, asOf: String,
-      spine: Option[(String, String)] = None): DataFrame = {
-    // Collapse the store's partition grain (접수년/접수월 carried from
-    // the hub layout) to pure (child key, ym) — normally 1:1 already,
-    // but a hub row whose partition values disagree with its receipt
-    // date must still count once and only once.
-    val childCols = parentKeys :+ childKey
-    val base = countRows
-      .groupBy((childCols :+ "ym").map(col): _*)
-      .agg(sum("n_all").as("n_all"), sum("n_valid").as("n_valid"),
-        sum("sum_lag").as("sum_lag"))
+      spine: Option[(String, String)] = None): DataFrame =
+    assemble(countRows.withColumn("n_lag", col("n_valid")),
+      spine.orElse(spineOf(countRows)), asOf)
 
-    val bounds = spine match {
-      case Some((lo, hi)) =>
-        val s = countRows.sparkSession
-        import s.implicits._
-        Seq((lo, hi)).toDF("lo", "hi")
-      case None => base.filter(col("ym").isNotNull)
-        .agg(min("ym").as("lo"), max("ym").as("hi"))
-    }
-    val counts = base.filter(col("ym").isNotNull)
-      .select((childCols :+ "ym" :+ "n_all" :+ "n_valid").map(col): _*)
-    // keys from ALL count rows — the ym-null grain keeps all-undated
-    // keys alive, mirroring build()'s keys-from-all-rows.
-    val keys = base.select(childCols.map(col): _*).distinct()
-
-    def lags(group: Seq[String]): DataFrame = base
-      .groupBy(group.map(col): _*)
-      .agg(sum("sum_lag").as("__sl"), sum("n_valid").as("__nv"))
-      .select(group.map(col) :+
-        when(col("__nv") > 0, col("__sl") / col("__nv"))
-          .as("avg_lag"): _*)
-
-    assemble(fillMonths(bounds, keys, counts), lags(childCols),
-      lags(parentKeys), asOf)
-  }
-
-  /** Zero-filled (child key × month) grid from explicit spine bounds. */
-  private def fillMonths(bounds: DataFrame, keys: DataFrame,
-      counts: DataFrame): DataFrame = {
-    val childCols = parentKeys :+ childKey
-    val months = bounds.select(explode(sequence(
-      to_date(col("lo"), "yyyy-MM"), to_date(col("hi"), "yyyy-MM"),
-      expr("interval 1 month"))).as("md"))
-      .select(date_format(col("md"), "yyyy-MM").as("ym"))
-    joinNullSafe(broadcast(months).crossJoin(keys),
-      counts, childCols :+ "ym", "left")
-      .na.fill(0L, Seq("n_all", "n_valid"))
-  }
-
-  /** The shared document-assembly tail: child series + stats, parent
-    * series + stats, nested struct shape. `filled` is the zero-filled
-    * (child key, ym, n_all, n_valid) grid; `childLags`/`parentLags`
-    * carry `avg_lag` (nullable) at their grains.
+  /** The shared document assembly: two aggregations over a driver-
+    * literal month spine, no join. `grain` holds (child key, ym, n_all,
+    * n_valid, sum_lag, n_lag) rows — several rows per (child key, ym)
+    * are summed, and a null `ym` row keeps its key alive and carries
+    * lag sums without entering any series.
+    *  - child grain: the dated (ym, n_all, n_valid) entries collected
+    *    per child key, zero-filled by a `transform` over the spine
+    *    (spine order = ascending, so no sort), plus Σsum_lag, Σn_lag;
+    *  - parent grain: the sorted child structs, the parent series as
+    *    the element-wise sum of the child series, and the parent lag
+    *    Σsum_lag / Σn_lag.
+    * The spine is every month lo..hi; with none (no dated row) there
+    * is no document.
     */
-  private def assemble(filled: DataFrame, childLags: DataFrame,
-      parentLags: DataFrame, asOf: String): DataFrame = {
-    val childCols = parentKeys :+ childKey
-    val childSeries = filled
+  private def assemble(grain: DataFrame, spine: Option[(String, String)],
+      asOf: String): DataFrame = {
+    val months = spine.fold(Seq.empty[String]) { case (lo, hi) =>
+      val end = YearMonth.parse(hi)
+      Iterator.iterate(YearMonth.parse(lo))(_.plusMonths(1))
+        .takeWhile(!_.isAfter(end)).map(_.toString).toSeq
+    }
+    val spineArr = array(months.map(lit): _*).cast("array<string>")
+    def entry(ym: Column, nAll: Column, nValid: Column): Column =
+      struct(ym.as("ym"), nAll.as("n_all"), nValid.as("n_valid"))
+    def sumAt(entries: Column, m: Column, field: String): Column =
+      aggregate(filter(entries, e => e.getField("ym") === m), lit(0L),
+        (acc, e) => acc + e.getField(field).cast("long"))
+    def avgLag: Column =
+      when(col("n_lag") > 0, col("sum_lag") / col("n_lag"))
+    def stats: Column = statsStruct(
+      transform(col("series"), s => s.getField("n_valid").cast("double")),
+      avgLag)
+    def history: Column = transform(col("series"), s =>
+      struct(s.getField("ym").as("date"),
+        s.getField("n_all").cast("int").as("count")))
+
+    val children = grain.where(lit(months.nonEmpty))
       .groupBy(childCols.map(col): _*)
-      .agg(sort_array(collect_list(struct(col("ym"), col("n_all"), col("n_valid"))))
-        .as("series"))
-      .transform(joinNullSafe(_, childLags, childCols, "left"))
-      .select(
-        parentKeys.map(col) :+
-          struct(
-            coalesce(col(childKey).cast("string"), lit("")).as("sub_key"),
-            statsStruct(transform(col("series"), s => s.getField("n_valid").cast("double")),
-              col("avg_lag")).as("stats"),
-            transform(col("series"), s =>
-              struct(s.getField("ym").as("date"),
-                s.getField("n_all").cast("int").as("count"))).as("history"))
-            .as("child"): _*)
+      .agg(collect_list(when(col("ym").isNotNull,
+          entry(col("ym"), col("n_all"), col("n_valid")))).as("entries"),
+        sum("sum_lag").as("sum_lag"), sum("n_lag").as("n_lag"))
+      .select(childCols.map(col) ++ Seq(col("sum_lag"), col("n_lag"),
+        transform(spineArr, m => entry(m, sumAt(col("entries"), m, "n_all"),
+          sumAt(col("entries"), m, "n_valid"))).as("series")): _*)
 
-    val children = childSeries
+    val zero = transform(spineArr, m => entry(m, lit(0L), lit(0L)))
+    children
       .groupBy(parentKeys.map(col): _*)
-      .agg(array_sort(collect_list(col("child"))).as("children"))
-
-    // parent-grain series (sums over the zero-filled child grid)
-    val pCounts = filled
-      .groupBy((parentKeys :+ "ym").map(col): _*)
-      .agg(sum("n_all").as("n_all"), sum("n_valid").as("n_valid"))
-
-    val parents = pCounts
-      .groupBy(parentKeys.map(col): _*)
-      .agg(sort_array(collect_list(struct(col("ym"), col("n_all"), col("n_valid"))))
-        .as("series"))
-      .transform(joinNullSafe(_, parentLags, parentKeys, "left"))
-
-    joinNullSafe(parents, children, parentKeys, "left")
+      .agg(
+        array_sort(collect_list(struct(
+          coalesce(col(childKey).cast("string"), lit("")).as("sub_key"),
+          stats.as("stats"), history.as("history")))).as("children"),
+        aggregate(collect_list(col("series")), zero, (acc, s) =>
+          zip_with(acc, s, (a, b) => entry(a.getField("ym"),
+            a.getField("n_all") + b.getField("n_all"),
+            a.getField("n_valid") + b.getField("n_valid")))).as("series"),
+        sum("sum_lag").as("sum_lag"), sum("n_lag").as("n_lag"))
       .select(
-        concat_ws("_", parentKeys.map(pyStr): _*).as("key"),
+        martKey.as("key"),
         concat_ws("_", parentKeys.map(sanitized): _*).as("filename_key"),
         struct(
           lit(asOf).as("last_updated"),
           lit(0).as("warning_level"),
           lit(null).cast("string").as("champion_model"),
-          statsStruct(transform(col("series"), s => s.getField("n_valid").cast("double")),
-            col("avg_lag")).as("parent_stats")).as("meta"),
+          stats.as("parent_stats")).as("meta"),
         struct(
-          transform(col("series"), s =>
-            struct(s.getField("ym").as("date"),
-              s.getField("n_all").cast("int").as("count"))).as("history"),
+          history.as("history"),
           array().cast("array<struct<date:string,count:int>>").as("forecast"))
           .as("data"),
-        coalesce(col("children"),
-          array().cast(
-            "array<struct<sub_key:string,stats:struct<mean:double,std:double,slope:double,avg_lag_days:double>,history:array<struct<date:string,count:int>>>>"))
-          .as("children"))
+        col("children"))
   }
 
   /** Dataset-form sink (the 100 TB path): one JSON dataset, partition
@@ -356,7 +320,8 @@ object SeriesMart {
   /** The document schema as parquet reads it back (every field
     * nullable). [[build]] and [[buildFromCounts]] share [[assemble]],
     * whose output types do not depend on the key columns' types, so
-    * analysing an empty count frame yields it.
+    * analysing an empty count frame over a given spine yields it
+    * without running a job.
     */
   private lazy val documentSchema: StructType = {
     def nullable(t: DataType): DataType = t match {
@@ -365,11 +330,10 @@ object SeriesMart {
       case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
       case other => other
     }
-    val spark = SparkSession.active
-    val grain = (parentKeys :+ childKey :+ "ym").map(StructField(_, StringType)) ++
-      Seq("n_all", "n_valid", "sum_lag").map(StructField(_, LongType))
-    nullable(buildFromCounts(spark.createDataFrame(java.util.List.of[Row](),
-      StructType(grain)), "").schema).asInstanceOf[StructType]
+    val empty = SparkSession.active.createDataFrame(
+      java.util.List.of[Row](), SeriesCounts.schema)
+    nullable(buildFromCounts(empty, "", Some(("2000-01", "2000-01"))).schema)
+      .asInstanceOf[StructType]
   }
 
   /** Bytes on disk of the files `df` scans, summed from the listing its
@@ -417,41 +381,21 @@ object SeriesMart {
     * touched set [[refreshFromCounts]] would leave it permanently
     * stale. Null-key batch rows never match (they cannot be updates of
     * an existing claim — the hub merge collapses them separately).
+    * [[UploadFlow]] does not call this: it takes the same keys from
+    * the upsert's own probe ([[HubStore.KeyProbe]]), one scan instead
+    * of two.
     */
-  def priorParentKeys(preUpsertHub: DataFrame, batch: DataFrame): Set[String] =
-    probeParentKeys(preUpsertHub, batch, None)
-
-  /** Path-aware [[priorParentKeys]]: the hub's own layout marker picks
-    * the probe ([[HubStore.oldLocationsFor]]), so on a bucketed hub it
-    * prunes to the batch keys' bucket partitions, as the upsert's own
-    * probe does.
-    */
-  def priorParentKeys(spark: org.apache.spark.sql.SparkSession,
-      hubPath: String, batch: DataFrame): Set[String] = {
-    val root = new org.apache.hadoop.fs.Path(hubPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    probeParentKeys(HubStore.read(spark, hubPath), batch,
-      HubStore.readHubMeta(fs, root))
-  }
-
-  private def probeParentKeys(hub: DataFrame, batch: DataFrame,
-      hubBuckets: Option[Int]): Set[String] = {
+  def priorParentKeys(preUpsertHub: DataFrame, batch: DataFrame): Set[String] = {
     val keys = batch.filter(col(ClaimsSchema.keyCol).isNotNull)
       .select(col(ClaimsSchema.keyCol)).distinct()
-    // The upsert's own probe (narrow: key + partition columns). An
-    // upload pays it twice — once here against the pre-upsert hub,
-    // once inside the upsert — a deliberate trade: both scans are
-    // narrow, and fusing them would mean the upsert API accepting a
-    // precomputed probe it cannot trust.
-    HubStore.oldLocationsFor(hub, keys, hubBuckets)
-      .select(concat_ws("_", parentKeys.map(pyStr): _*).as("key"))
-      .distinct().collect().map(_.getString(0)).toSet
+    HubStore.oldLocations(preUpsertHub, keys)
+      .select(martKey).distinct().collect().map(_.getString(0)).toSet
   }
 
   /** Durable record of the parent keys an IN-FLIGHT upload touches —
-    * written BEFORE the hub upsert ([[graft.api.ClaimAnalysisEngine
-    * .uploadBatch]]). The pre-upsert [[priorParentKeys]] probe exists
-    * only in driver memory; if the process dies between the hub commit
+    * before the hub commit, from the upsert's pre-commit hook
+    * ([[UploadFlow]]). The pre-upsert prior-key probe exists only in
+    * driver memory; if the process dies between the hub commit
     * and the completed mart refresh, a retry re-probes the ALREADY-
     * MERGED hub, finds only the claims' NEW locations, and the vacated
     * document would stay stale forever. [[refreshFromCounts]] unions
@@ -529,7 +473,7 @@ object SeriesMart {
     * per-series regeneration (docs/project_master.md:24), which its
     * implementation never achieved (core/storage.py:504+ regenerates
     * every document per upload). Regenerates ONLY the parent series
-    * the `batch` touches and rewrites only their hash buckets; every
+    * named by `touchedKeys` and rewrites only their hash buckets; every
     * other document keeps its bytes. Every document is assembled from
     * the maintained [[SeriesCounts]] store ([[buildFromCounts]]) and
     * the global-spine probe aggregates count rows, so every read is
@@ -559,11 +503,11 @@ object SeriesMart {
     * rebuild (every document rebuilt and re-stamped) — callers can
     * alert when uploads keep forcing full regenerations.
     *
-    * `priorKeys` — the batch claims' PRE-upsert mart keys, from
-    * [[priorParentKeys]] run against the hub BEFORE the upsert — makes
-    * a parent-key move regenerate the document the claim left, not
-    * only the one it arrived in; omitting it is safe only when uploads
-    * never re-file an existing claim under new 플랜트/제품범주2/대분류.
+    * `touchedKeys` — the mart keys to regenerate: the batch rows'
+    * keys plus the batch claims' PRE-upsert keys (both reported by the
+    * upsert's probe, [[HubStore.KeyProbe]]). The prior keys make a
+    * parent-key move regenerate the document the claim left, not only
+    * the one it arrived in.
     *
     * `last_updated`: untouched documents are carried over
     * byte-for-byte, INCLUDING `meta.last_updated` — a document not
@@ -572,18 +516,13 @@ object SeriesMart {
     * updated").
     */
   def refreshFromCounts(spark: SparkSession,
-      counts: DataFrame, batch: DataFrame, asOf: String,
-      dir: String, buckets: Option[Int] = None,
-      priorKeys: Set[String] = Set.empty): Boolean =
+      counts: DataFrame, touchedKeys: Set[String], asOf: String,
+      dir: String, buckets: Option[Int] = None): Boolean =
    // Leased: a direct refresh racing a live UploadFlow would interleave
    // with its journal lifecycle silently; the flow itself re-enters (it
    // already holds the mart lease).
    MaintenanceLease.withLease(spark, dir) {
-    val spineRow = counts.filter(col("ym").isNotNull)
-      .agg(min("ym"), max("ym")).collect()(0)
-    val spineOpt =
-      if (spineRow.isNullAt(0)) None
-      else Some((spineRow.getString(0), spineRow.getString(1)))
+    val spineOpt = spineOf(counts)
     val martRoot = new org.apache.hadoop.fs.Path(dir)
     val fs = martRoot
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -616,22 +555,20 @@ object SeriesMart {
       case Some((b, s)) if s == spineOpt && buckets.forall(_ == b) => b
       case _ => return fullRebuild()
     }
-    // Touched documents: the batch's parent-key set as mart keys, plus
-    // the keys its claims were previously filed under (`priorKeys`),
-    // plus any keys a CRASHED upload journaled before its hub upsert
-    // ([[journalTouchedKeys]]) — the retry's own probe cannot refind
-    // those in the merged hub. Only the generations READ here are
-    // cleared at completion.
+    // Touched documents: the caller's keys plus any keys a CRASHED
+    // upload journaled before its hub commit ([[journalTouchedKeys]])
+    // — the retry's own probe cannot refind those in the merged hub.
+    // Only the generations READ here are cleared at completion.
     val (journaled, journalFiles) = readTouchedJournals(fs, dir)
-    val touchedKeys = batch
-      .select(concat_ws("_", parentKeys.map(pyStr): _*).as("key"))
-      .distinct().collect().map(_.getString(0)).toSet ++
-      priorKeys ++ journaled
-    if (touchedKeys.isEmpty) {
+    val touched = touchedKeys ++ journaled
+    if (touched.isEmpty) {
       clearTouchedJournals(fs, dir, journalFiles); return true
     }
-    val existing = spark.read.parquet(dir)
-    val touchedBuckets = bucketsOf(spark, touchedKeys, n)
+    // The known schema (the bucket column typed as partition inference
+    // types it): no schema-inference job.
+    val existing = spark.read
+      .schema(documentSchema.add(bucketCol, IntegerType)).parquet(dir)
+    val touchedBuckets = bucketsOf(spark, touched, n)
     // The rebuild filters on the computed mart key, not per-column
     // equalities: the key is LOSSY (components may contain the "_"
     // separator — the fixture's own "PLANT_A"/"CAT2_X" do — and a
@@ -643,10 +580,8 @@ object SeriesMart {
     // touched key with no count rows left (a parent-key move drained
     // it) yields no document.
     val rebuilt = buildFromCounts(
-      counts.filter(concat_ws("_", parentKeys.map(pyStr): _*)
-        .isin(touchedKeys.toSeq: _*)),
-      asOf, spineOpt)
-    val keep = keepRows(existing, touchedBuckets, touchedKeys)
+      counts.filter(martKey.isin(touched.toSeq: _*)), asOf, spineOpt)
+    val keep = keepRows(existing, touchedBuckets, touched)
     val out = graft.Checkpoint.pinTransient(
       keep.unionByName(rebuilt.select(keep.columns.map(col): _*)))
     try {

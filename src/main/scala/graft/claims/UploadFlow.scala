@@ -9,22 +9,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ingester (`graft.streaming.StreamingIngest`) so the two ingest
   * paths cannot drift:
   *
-  *  1. probe the batch claims' CURRENT mart keys against the
-  *     pre-upsert hub ([[SeriesMart.priorParentKeys]] — a key move's
-  *     old location is unknowable after the merge);
-  *  2. journal those keys durably into the mart dir
-  *     ([[SeriesMart.journalTouchedKeys]]) so a crash between the hub
-  *     commit and the completed refresh is recoverable by replay;
-  *  3. upsert the hub (partition-scoped, crash-journaled), journaling
-  *     the affected partitions into the count store's dir BEFORE the
-  *     commit (the upsert's `onAffected` hook);
-  *  4. bring the [[SeriesCounts]] store up to date by replacing
+  *  1. upsert the hub (partition-scoped, crash-journaled). Its probe
+  *     collects, with the partition tuples, the mart keys of the batch
+  *     rows and of the hub rows the batch's claims are filed under NOW
+  *     (a key move's old location is unknowable after the merge); its
+  *     pre-commit hooks journal the affected partitions into the count
+  *     store's dir (`onAffected`) and those prior mart keys into the
+  *     mart dir ([[SeriesMart.journalTouchedKeys]], via
+  *     [[HubStore.KeyProbe]]), so a crash between the hub commit and
+  *     the completed refresh is recoverable by replay;
+  *  2. bring the [[SeriesCounts]] store up to date by replacing
   *     exactly the journaled partitions from the merged hub
   *     (partition-pruned, batch-sized — never a full hub pass);
-  *  5. refresh the bucketed mart incrementally from the counts
-  *     ([[SeriesMart.refreshFromCounts]]) — the refresh reads no hub
-  *     rows, also for the spine-extending first upload of a month,
-  *     which reassembles every document from count rows.
+  *  3. refresh the bucketed mart incrementally from the counts
+  *     ([[SeriesMart.refreshFromCounts]]) for the probed keys — the
+  *     refresh reads no hub rows, also for the spine-extending first
+  *     upload of a month, which reassembles every document from count
+  *     rows.
   *
   * Replaying the same batch after a crash at ANY point is idempotent:
   * the upsert's keyed merge converges, the count replacement derives
@@ -55,7 +56,7 @@ object UploadFlow {
       hubLayout: HubStore.FirstWrite = HubStore.Bucketed()): Boolean =
     // Single-writer lease over the whole flow ([[MaintenanceLease]]):
     // a second concurrent flow against the same mart fails loudly
-    // HERE — before its probe, journal writes, or hub upsert — instead
+    // HERE — before its probe, journal writes, or hub commit — instead
     // of corrupting the non-table-format layouts silently. A crashed
     // holder is taken over after `leaseTtlMs`; every crash window
     // inside the flow stays journaled and replayable independent of
@@ -86,38 +87,37 @@ object UploadFlow {
 
     val countsDir = SeriesCounts.dirFor(martDir)
     // The batch lineage (CSV read + canonicalize + preprocess shuffle)
-    // is consumed by three stages — pin it once. Transient: the frame
-    // dies with this call; a retry replays the whole flow.
+    // is read by each of the upsert's jobs (the first write's included)
+    // — pin it once. Transient: the frame dies with this call; a retry
+    // replays the whole flow.
     val batch = graft.Checkpoint.pinTransient(prepared)
     try {
-      val priors =
-        if (HubStore.exists(spark, hubPath))
-          // Path-aware probe: bucket-pruned on a bucketed hub layout.
-          SeriesMart.priorParentKeys(spark, hubPath, batch)
-        else Set.empty[String]
-      if (priors.nonEmpty)
-        SeriesMart.journalTouchedKeys(spark, martDir, priors)
-      // A bucketed hub reports three-level (year, month, bucket)
-      // tuples; journalParts itself truncates to the count store's
-      // (year, month) grain, so its replacement re-derives whole
-      // touched months.
+      var touched = Set.empty[String]
       // The flow's FIRST hub write creates the key-hash BUCKETED
       // layout by default (round-11 verdict: the flat default paid a
-      // full narrow key-column scan per upload in the probe and
-      // priorParentKeys; the bucket-pruned path existed only for hubs
-      // born bucketed). Existing hubs keep their layout — the upsert
-      // detects it — and `HubStore.migrateToBucketed` converts a flat
-      // one in place. `hubLayout = HubStore.Flat` opts a flow back into
-      // the flat first-write.
+      // full narrow key-column scan per upload in the probe; the
+      // bucket-pruned path existed only for hubs born bucketed).
+      // Existing hubs keep their layout — the upsert detects it — and
+      // `HubStore.migrateToBucketed` converts a flat one in place.
+      // `hubLayout = HubStore.Flat` opts a flow back into the flat
+      // first-write. A bucketed hub reports three-level (year, month,
+      // bucket) tuples; journalParts itself truncates to the count
+      // store's (year, month) grain, so its replacement re-derives
+      // whole touched months.
       HubStore.upsert(spark, batch, hubPath,
         onAffected = parts =>
           SeriesCounts.journalParts(spark, countsDir, parts),
-        firstWrite = hubLayout)
-      val merged = HubStore.read(spark, hubPath)
-      SeriesCounts.applyPending(spark, merged, countsDir)
+        firstWrite = hubLayout,
+        keyProbe = Some(HubStore.KeyProbe(SeriesMart.martKey,
+          (prior, batchKeys) => {
+            SeriesMart.journalTouchedKeys(spark, martDir, prior)
+            touched = prior ++ batchKeys
+          })))
+      SeriesCounts.applyPending(spark, HubStore.read(spark, hubPath),
+        countsDir)
       SeriesMart.refreshFromCounts(spark,
-        SeriesCounts.read(spark, countsDir), batch, asOf, martDir,
-        buckets, priors)
+        SeriesCounts.read(spark, countsDir), touched, asOf, martDir,
+        buckets)
     } finally graft.Checkpoint.release(batch)
   }
 }

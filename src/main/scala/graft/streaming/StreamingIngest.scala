@@ -30,8 +30,9 @@ object StreamingIngest {
     *
     * `martDir` (optional) keeps the bucketed series mart CURRENT under
     * the stream: each micro-batch runs the full
-    * [[graft.claims.UploadFlow]] — pre-upsert prior-keys probe +
-    * durable journal, hub upsert, incremental mart refresh — so
+    * [[graft.claims.UploadFlow]] — hub upsert whose probe yields the
+    * pre-upsert prior keys (durably journaled), incremental mart
+    * refresh — so
     * continuous uploads maintain both stores at O(delta) instead of
     * the reference's regenerate-everything-per-upload. A failed batch
     * is replayed by the engine against the same file set; the flow is

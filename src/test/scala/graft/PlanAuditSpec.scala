@@ -463,8 +463,10 @@ class PlanAuditSpec extends AnyFunSuite {
             lit("2023").as("접수년"), lit("10").as("접수월"),
             (col("id") % 28 + 1).cast("string").as("접수일")))))
     graft.claims.HubStore.writeBucketedHub(wide, dir, buckets = 8)
+    val k7 = Seq("K7").toDF("상담번호")
     val probe = graft.claims.HubStore.oldLocationsBucketed(
-        spark.read.parquet(dir), Seq("K7").toDF("상담번호"), 8)
+        spark.read.parquet(dir), k7, k7.select(pmod(xxhash64(col("상담번호")),
+          lit(8))).collect().map(_.getLong(0)).toSet)
       .select("접수년", "접수월", "_key_bucket").distinct()
     probe.collect()
     val plan = probe.queryExecution.executedPlan.toString
@@ -495,8 +497,10 @@ class PlanAuditSpec extends AnyFunSuite {
     graft.claims.HubStore.write(wide.drop(
       graft.claims.ClaimsSchema.ingestSeqCol), dir)  // born FLAT
     graft.claims.HubStore.migrateToBucketed(spark, dir, buckets = Some(8))
+    val k7 = Seq("K7").toDF("상담번호")
     val probe = graft.claims.HubStore.oldLocationsBucketed(
-        spark.read.parquet(dir), Seq("K7").toDF("상담번호"), 8)
+        spark.read.parquet(dir), k7, k7.select(pmod(xxhash64(col("상담번호")),
+          lit(8))).collect().map(_.getLong(0)).toSet)
       .select("접수년", "접수월", "_key_bucket").distinct()
     probe.collect()
     val plan = probe.queryExecution.executedPlan.toString
@@ -508,6 +512,47 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(readSchemas.nonEmpty && readSchemas.forall(
       _ == "struct<상담번호:string>"),
       s"migrated probe must read only the key column, got: $readSchemas")
+  }
+
+  test("the upsert's fused old-side probe prunes to buckets and reads key + parent columns") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // The upsert's old-side probe also carries the caller's mart key,
+    // so the flow needs no separate prior-key scan of the hub. It must
+    // keep the bucket pruning, and its scan may add only the three
+    // parent columns the mart key is made of.
+    val dir = java.nio.file.Files.createTempDirectory("hubfused").toString
+    val wide = graft.claims.ClaimsEtl.preprocess(
+      graft.claims.ClaimsEtl.canonicalize54(
+        graft.claims.ClaimsEtl.withIngestSeq(
+          spark.range(64).select(
+            concat(lit("K"), col("id")).as("상담번호"),
+            lit("2023").as("접수년"), lit("10").as("접수월"),
+            (col("id") % 28 + 1).cast("string").as("접수일"),
+            concat(lit("P"), col("id") % 3).as("플랜트")))))
+    graft.claims.HubStore.writeBucketedHub(wide, dir, buckets = 8)
+    val k7 = Seq("K7").toDF("상담번호")
+    val bucketSet = k7.select(pmod(xxhash64(col("상담번호")), lit(8)))
+      .collect().map(_.getLong(0)).toSet
+    val probe = graft.claims.HubStore.oldLocationRows(
+        spark.read.parquet(dir), k7, Some(bucketSet))
+      .select(col("접수년"), col("접수월"), col("_key_bucket"),
+        graft.claims.SeriesMart.martKey)
+      .distinct()
+    probe.collect()
+    val plan = probe.queryExecution.executedPlan.toString
+    val scans = plan.split("\n").filter(_.contains("FileScan")).toSeq
+    assert(scans.nonEmpty, plan.take(400))
+    scans.foreach(s => assert(
+      "PartitionFilters: \\[[^\\]]*_key_bucket".r.findFirstIn(s).isDefined,
+      s"every probe scan must prune to buckets:\n$s"))
+    val fields = "ReadSchema: struct<([^\n]*)>".r.findAllMatchIn(plan)
+      .map(_.group(1).split(",").map(_.split(":")(0).trim).toSet).toSeq
+    val keyed = Set("상담번호", "플랜트", "제품범주2", "대분류")
+    assert(fields.contains(keyed),
+      s"the keyed probe must read exactly the claim key + parent columns, got: $fields")
+    assert(fields.forall(_.subsetOf(keyed)),
+      s"no probe scan may read beyond the claim key + parent columns, got: $fields")
   }
 
   test("count replacement reads only the journaled hub partitions, narrow") {

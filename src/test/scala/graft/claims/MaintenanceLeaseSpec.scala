@@ -163,7 +163,8 @@ class MaintenanceLeaseSpec extends AnyFunSuite {
       MaintenanceLease.defaultTtlMs)
     intercept[IllegalStateException] {
       SeriesMart.refreshFromCounts(spark,
-        SeriesCounts.read(spark, countsDir), fixture, "2024-03-01", martDir)
+        SeriesCounts.read(spark, countsDir), Set("PLANT_A_CAT2_X_MAJOR_P"),
+        "2024-03-01", martDir)
     }
     intercept[IllegalStateException] {
       SeriesCounts.rebuild(spark, hub, countsDir)

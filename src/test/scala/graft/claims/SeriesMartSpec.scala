@@ -93,13 +93,18 @@ class SeriesMartSpec extends AnyFunSuite {
       .toJSON.collect().toSet
 
   /** The mart refresh over a hub held in memory: the count store that
-    * hub maintains is `SeriesCounts.aggregate(hub)`.
+    * hub maintains is `SeriesCounts.aggregate(hub)`, and the touched
+    * keys are the batch rows' mart keys plus `priorKeys`.
     */
   private def refresh(hub: DataFrame, batch: DataFrame, asOf: String,
       dir: String, buckets: Option[Int] = None,
       priorKeys: Set[String] = Set.empty): Boolean =
-    SeriesMart.refreshFromCounts(spark, SeriesCounts.aggregate(hub), batch,
-      asOf, dir, buckets, priorKeys)
+    SeriesMart.refreshFromCounts(spark, SeriesCounts.aggregate(hub),
+      martKeys(batch) ++ priorKeys, asOf, dir, buckets)
+
+  private def martKeys(batch: DataFrame): Set[String] =
+    batch.select(SeriesMart.martKey).distinct().collect()
+      .map(_.getString(0)).toSet
 
   private def parquetListing(dir: String): Map[String, (Long, Long)] = {
     def walk(f: java.io.File): Seq[java.io.File] =
