@@ -15,9 +15,10 @@ import scala.util.control.NonFatal
   *    set, results of at most 30 rows). It prints no time: `count()`
   *    lets Catalyst prune unreferenced columns and aggregates, so it
   *    can skip the very kernel an entry exists to run.
-  *  - `time` times noop writes, the materialization Bench times, with
-  *    [[Bench.timeEntry]] (default 3 reps; failed reps are never
-  *    timings) and prints every successful rep's seconds and the min.
+  *  - `time` times noop writes ([[GraftSession.noopWrite]], the
+  *    materialization Bench times) with [[Bench.timeEntry]] (default 3
+  *    reps; failed reps are never timings) and prints every successful
+  *    rep's seconds and the min.
   *  - `explain` prints the formatted physical plan.
   *
   * `run` and `time` warm the session first ([[Warmup]]). Each entry runs
@@ -56,11 +57,10 @@ object Dev {
               } catch { case NonFatal(e) => println(s"$name FAILED: $e") }
             case "time" =>
               val t = Bench.timeEntry(name,
-                () => fn(spark, sfDir).write.mode("overwrite").format("noop").save(),
-                reps, prior = None)
+                () => GraftSession.noopWrite(fn(spark, sfDir)), reps)
               val summary = t.best.fold("  ALL REPS FAILED") { b =>
                 f"  min=$b%.2f" +
-                  (if (t.failed) s" (over ${t.times.size} ok of ${t.reps})" else "")
+                  (if (t.failed) s" (over ${t.times.size} ok of $reps)" else "")
               }
               println(f"$name%-28s " + t.times.map(x => f"$x%.2f").mkString(" ") + summary)
             case "explain" =>

@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The one SparkSession builder for graft's mains (Bench, Verify, Dev).
-  * The oracle verifies the exact planner config the bench times, so a
-  * join-strategy bug fails verify instead of only showing up as a bench
-  * anomaly.
+/** The one SparkSession builder for graft's mains (Bench, Verify, Dev),
+  * plus the helpers they share. The oracle verifies the exact
+  * planner config the bench times, so a join-strategy bug fails verify
+  * instead of only showing up as a bench anomaly.
   */
 object GraftSession {
 
@@ -62,4 +62,27 @@ object GraftSession {
     sc.setJobGroup(entry, entry)
     try body finally sc.clearJobGroup()
   }
+
+  /** Materialize every row and column of `df` into Spark's noop sink.
+    * Timing or warming an entry needs this, not `count()`: under a bare
+    * count Catalyst prunes unreferenced columns and aggregate functions,
+    * so a scoring kernel inside `agg(min(...))` or a map-only column
+    * never runs.
+    */
+  def noopWrite(df: DataFrame): Unit =
+    df.write.mode("overwrite").format("noop").save()
+
+  /** `s` as a JSON string literal. Quote, backslash and every control
+    * character (< 0x20) are escaped: one raw tab or newline in an
+    * embedded string makes the whole document unparseable.
+    */
+  def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

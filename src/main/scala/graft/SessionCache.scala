@@ -62,24 +62,6 @@ object SessionCache {
   private val entries =
     scala.collection.mutable.LinkedHashMap.empty[String, Entry]
 
-  /** Seconds spent INSIDE each key's build closure, accumulated across
-    * rebuilds (round-17, VERDICT item 2: session-pin builds moved ~10 s
-    * of r15 headline cost into once-per-session work that min-of-reps
-    * excludes from the bench's `value` — the artifact needs the build
-    * seconds the way it already records cold-store builds, or the
-    * amortization is invisible). Keyed by the CALLER key (not the
-    * session-identity-prefixed one) so the artifact prints readable
-    * names; a bench run owns one session, so collisions cannot occur
-    * within the window Bench diffs ([[buildSecondsSnapshot]] before vs
-    * after the timed loop).
-    */
-  private val buildLog =
-    scala.collection.mutable.LinkedHashMap.empty[String, Double]
-
-  /** Immutable snapshot of the per-key build seconds so far. */
-  private[graft] def buildSecondsSnapshot: Map[String, Double] =
-    synchronized { buildLog.toMap }
-
   private def release(e: Entry): Unit = {
     val s = e.session.get
     if (s != null && !s.sparkContext.isStopped)
@@ -160,19 +142,7 @@ object SessionCache {
               .foreach(k => entries.remove(k)
                 .foreach(logOrphanedCheckpointFiles))
           }
-          // Timing wraps the CLOSURE, so only the one caller that
-          // actually runs the build pays/records it; cache hits add
-          // nothing. The registry lock is taken only for the tiny map
-          // update after the build finishes (build bodies themselves
-          // may re-enter getOrBuild for nested pins — see the object
-          // doc's lock-ordering note).
-          val c = new Cell(() => {
-            val t0 = System.nanoTime()
-            val r = build
-            val dt = (System.nanoTime() - t0) / 1e9
-            synchronized { buildLog(key) = buildLog.getOrElse(key, 0.0) + dt }
-            r
-          })
+          val c = new Cell(() => build)
           entries(full) = Entry(new WeakReference(spark), c, group)
           c
       }

@@ -63,15 +63,11 @@ object Warmup {
       .find(f => f.isDirectory && f.getAbsolutePath != self.getAbsolutePath)
       .getOrElse(return)
     val failed = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      // noop write, NOT count(): count() lets the optimizer prune the
-      // computed columns, so map-only entries (scrub, fingerprint,
-      // quantize...) would warm a bare row count and their regex/hash
-      // codegen would still compile cold inside the first TIMED entry —
-      // the same materialization-honesty rule Bench.scala documents.
+      // Warm with the same materialization the timed run uses, so every
+      // entry's codegen compiles here and not inside its first timed rep.
       try {
         GraftSession.inJobGroup(spark, name) {
-          fn(spark, small.getAbsolutePath)
-            .write.mode("overwrite").format("noop").save()
+          GraftSession.noopWrite(fn(spark, small.getAbsolutePath))
         }
         None
       } catch { case scala.util.control.NonFatal(_) => Some(name) }

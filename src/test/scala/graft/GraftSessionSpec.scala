@@ -87,4 +87,15 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(e.getMessage === "planted")
     assert(spark.sparkContext.getLocalProperty(groupKey) === null)
   }
+
+  test("jsonStr output parses back to the input string") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val inputs = Seq("", "plain", "say \"hi\"", "C:\\dir\\", "a\tb", "a\r\nb",
+      "line1\nline2", "ctl\u0001x", "all: \" \\ \t \r \n \u0001 \u001f end")
+    inputs.foreach { s =>
+      val lit = GraftSession.jsonStr(s)
+      assert(!lit.exists(_ < ' '), s"raw control char in $lit")
+      assert(mapper.readValue(lit, classOf[String]) === s)
+    }
+  }
 }
