@@ -406,13 +406,16 @@ object GraphQueries extends QueryModule {
     * is pinned per round (three consumers: the degree pass and both
     * ends of the next filter), the same per-level discipline as BFS.
     */
-  /** Consistency contract (round-17, ADVICE): when `firstDeg` is
-    * given it MUST be the degree frame of exactly `eRaw`'s edge set —
-    * round-1 peeling trusts it without re-derivation, so an
-    * inconsistent pair silently corrupts the peel (no error). The only
-    * caller passing it is the driver entry, which hands the shared
-    * [[degFrame]] built from the same symmetric edge pin it passes as
-    * `eRaw`; any new caller must preserve that pairing or pass None.
+  /** Consistency contract: when `firstDeg` is given it MUST be the
+    * degree frame of exactly `eRaw`'s edge set — round-1 peeling
+    * trusts it without re-derivation. The pairing is checked with the
+    * handshake identity Σ firstDeg.dg == 2·|E|, folded into the |V|
+    * count the entry takes anyway, and a mismatch fails loudly. The
+    * identity catches a degree frame of a different edge count, not
+    * every mispairing. The only caller passing it is the driver entry,
+    * which hands the shared [[degFrame]] built from the same edge pin
+    * it passes as `eRaw`; any new caller must preserve that pairing or
+    * pass None.
     */
   private[graft] def kcoreFrame(eRaw: DataFrame,
       firstDeg: Option[DataFrame] = None): DataFrame = {
@@ -431,7 +434,16 @@ object GraphQueries extends QueryModule {
     // |E| and |V| are the two driver-side scalars (1-row counts over
     // pinned frames — the BFS-seed budget class).
     val m = e.count()
-    val n = v.count()
+    val n = firstDeg match {
+      case Some(fd) =>
+        val r = fd.agg(count(lit(1)), sum(col("dg"))).collect()(0)
+        val degSum = if (r.isNullAt(1)) 0L else r.getLong(1)
+        require(degSum == 2L * m,
+          s"kcore: firstDeg is not the degree frame of eRaw: its degrees " +
+            s"sum to $degSum, but eRaw has 2*|E| = ${2L * m} edge ends")
+        r.getLong(0)
+      case None => v.count()
+    }
     require(n > 0, "kcore: empty co-occurrence graph")
     val k = (2L * m) / n
     val peeled = Seq.newBuilder[DataFrame]
@@ -729,18 +741,19 @@ object GraphQueries extends QueryModule {
     * because it points at good authorities and vice versa. Each
     * half-step is the PageRank contribution shape (one edges⋈scores
     * equi-join + a map-side-combined sum per far endpoint) followed
-    * by an exact integer normalization against the global sum, taken
-    * as an unpartitioned window over the ALREADY-AGGREGATED score
-    * frame (bounded by vertex cardinality — the aggTopShare
-    * precedent; round-16: the previous shape pinned the raw score
-    * frame, ran a separate broadcast-sum job, and pinned the
-    * normalized frame again — four pin jobs and two sum jobs per
-    * iteration for the same longs). The edge frame is pinned (read
-    * every half-step); each normalized score frame is pinned once —
-    * it feeds the next half-step's join and the final output.
+    * by an exact integer normalization against the global sum, a
+    * 1-row aggregate of the already-aggregated score frame broadcast-
+    * crossJoined back onto it — never collected, and never an
+    * un-partitioned window, which would move every vertex row to one
+    * task for the same number. The edge frame is pinned (read every
+    * half-step); each authority frame is pinned once — it feeds the
+    * next half-step's join and the final output.
     */
   private[graft] def hitsFrame(beRaw: DataFrame): (DataFrame, DataFrame) = {
-    val wAll = org.apache.spark.sql.expressions.Window.partitionBy()
+    def normalized(scores: DataFrame, key: String, raw: String,
+        out: String): DataFrame =
+      scores.crossJoin(broadcast(scores.agg(sum(col(raw)).as("t"))))
+        .select(col(key), expr(s"($raw * ${HitsScale}L) div t").as(out))
     val be = graft.Checkpoint.ensurePinned(beRaw)
     var hub = be.select(col("c")).distinct()
       .select(col("c"), lit(HitsScale).as("h"))
@@ -753,15 +766,12 @@ object GraphQueries extends QueryModule {
       // auth keeps the pin because pinning it is what executes the
       // (unpinned) hub half-step chained below it, and the LAST auth
       // genuinely has two consumers (final hub + output union).
-      auth = graft.Checkpoint.pin(
-        be.join(hub, Seq("c"))
-          .groupBy("p").agg(sum(col("h")).as("ar"))
-          .withColumn("t", sum(col("ar")).over(wAll))
-          .select(col("p"), expr(s"(ar * ${HitsScale}L) div t").as("a")))
-      hub = be.join(auth, Seq("p"))
-        .groupBy("c").agg(sum(col("a")).as("hr"))
-        .withColumn("t", sum(col("hr")).over(wAll))
-        .select(col("c"), expr(s"(hr * ${HitsScale}L) div t").as("h"))
+      auth = graft.Checkpoint.pin(normalized(
+        be.join(hub, Seq("c")).groupBy("p").agg(sum(col("h")).as("ar")),
+        "p", "ar", "a"))
+      hub = normalized(
+        be.join(auth, Seq("p")).groupBy("c").agg(sum(col("a")).as("hr")),
+        "c", "hr", "h")
     }
     (hub, auth)
   }

@@ -549,6 +549,26 @@ object TextQueries extends QueryModule {
       .limit(20)
   }
 
+  /** The (doc_id, source) map the per-source entries join the posting
+    * frame against. `documents.doc_id` must be UNIQUE — the table's
+    * primary key, which Tables.documents reads verbatim: the posting
+    * frame sums a duplicated id's tokens into one doc, and the join
+    * would then multiply them by its row count. The key is asserted in
+    * the same pass that builds the map: rows are grouped by doc_id, and
+    * an id with more than one row raises an error when the entry runs.
+    * Null ids never join and are left out.
+    */
+  private def docSources(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d).filter(col("doc_id").isNotNull)
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_rows"), first(col("source")).as("source"))
+      .select(col("doc_id"),
+        when(col("n_rows") > 1, raise_error(concat(
+          lit("documents.doc_id is not unique: "),
+          col("doc_id").cast("string"), lit(" has "),
+          col("n_rows").cast("string"), lit(" rows"))))
+          .otherwise(col("source")).as("source"))
+
   /** Per-source keyness — the top-5 most over-represented tokens per
     * source by SMOOTHED LOG-ODDS ratio vs the rest of the corpus
     * (Monroe et al.'s "fightin' words" statistic with a flat α = 0.5
@@ -567,14 +587,8 @@ object TextQueries extends QueryModule {
     // (source, token) counts = Σ tf over the source's docs — derived
     // from the session-pinned posting frame + a broadcast-size
     // doc→source map instead of re-tokenizing the corpus (round-16).
-    // Invariant (round-17, ADVICE): `documents.doc_id` is UNIQUE — the
-    // table's primary key, which Tables.documents reads verbatim. The
-    // old direct groupBy(source, tok) over the corpus tolerated a
-    // duplicate doc_id; this join would multiply its counts instead,
-    // so the derivation leans on the key property explicitly.
     val st = graft.Checkpoint.pin(tfFrame(s, d)
-      .join(Tables.documents(s, d).select(col("doc_id"), col("source")),
-        Seq("doc_id"))
+      .join(docSources(s, d), Seq("doc_id"))
       .groupBy(col("source"), col("term").as("tok"))
       .agg(sum(col("tf")).as("c_s")))
     val tokTot = st.groupBy("tok").agg(sum("c_s").as("c_t"))
@@ -614,8 +628,7 @@ object TextQueries extends QueryModule {
     // the corpus tokenize+distinct subtree plans three times (Catalyst
     // only reuses bit-identical exchanges; the aliases differ).
     val st = graft.Checkpoint.pin(tfFrame(s, d)
-      .join(Tables.documents(s, d).select(col("doc_id"), col("source")),
-        Seq("doc_id"))
+      .join(docSources(s, d), Seq("doc_id"))
       .select(col("source"), col("term").as("tok"))
       .distinct())
     val sizes = st.groupBy("source").agg(count(lit(1)).as("n"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
 import graft.multimodal.MultimodalOps
-import graft.vector.{IvfIndex, VectorOps}
+import graft.vector.{IvfIndex, LshIndex, VectorOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -79,10 +79,11 @@ object VectorQueries extends QueryModule {
     graft.SessionCache.getOrBuild(s, s"annbatch|$d") {
       // The SAME persisted index the single-query entry probes — one
       // layout serves both access patterns; the query rows themselves
-      // are filtered out of the candidate side, not re-indexed.
-      val index = VectorOps.lshIndexCached(Tables.embeddings(s, d),
+      // are filtered out of the candidate postings, not re-indexed.
+      val ix = VectorOps.lshIndexCached(Tables.embeddings(s, d),
         "vec_id", "embedding", dim = DIM, dir = lshIndexDir(d))
-        .filter(col("vec_id") % 50 =!= 0)
+      val index =
+        ix.copy(postings = ix.postings.filter(col("vec_id") % 50 =!= 0))
       val out = VectorOps.annTopKCosineBatch(index, queryBlock(s, d),
         "vec_id", "embedding", k = 5, dim = DIM)
         .persist()
@@ -138,10 +139,11 @@ object VectorQueries extends QueryModule {
 
   /** Multi-table multi-probe LSH ANN top-10 (same query; candidates
     * limited to vectors whose per-table bucket lies within Hamming
-    * distance 2 of the query's). Like the IVF entry, the bucketized
-    * index PERSISTS across sessions (round 11) — a warm session skips
-    * the corpus hashing scan, and the probe's per-table bucket filter
-    * prunes the tbl-partitioned, bucket-sorted layout.
+    * distance 2 of the query's). Like the IVF entry, the postings
+    * PERSIST across sessions — a warm session skips the corpus hashing
+    * scan, and the probe's per-table bucket filter prunes the
+    * tbl-partitioned, bucket-sorted layout; the candidates are scored
+    * against the embeddings table itself.
     */
   private def topkAnn(s: SparkSession, d: String): DataFrame =
     VectorOps.annTopKCosineIndexed(
@@ -451,11 +453,13 @@ object VectorQueries extends QueryModule {
     * partitions only, never a refit. This is the production
     * composition at 100 TB — the index is maintained AT INGEST, so
     * the first query after an append pays a warm probe, not an
-    * O(corpus) rebuild. Returns the maintained index rows; the topk
-    * entry probes them and the `_sound` audit pins them bit-equal to
-    * a one-shot build over the same final corpus.
+    * O(corpus) rebuild. Returns the maintained index — its postings
+    * and the ingested corpus, both pinned because the scratch slot is
+    * reused by the next evolution; the topk entry probes it and the
+    * `_sound` audit pins its postings bit-equal to a one-shot build
+    * over the same final corpus.
     */
-  private def streamMaintainedIndex(s: SparkSession, d: String): DataFrame =
+  private def streamMaintainedIndex(s: SparkSession, d: String): LshIndex =
     graft.SessionCache.getOrBuild(s, s"streamvecindex|$d") {
       // A deterministic, REUSED slot under the index root, wiped at
       // the start of each evolution — a fresh createTempDirectory per
@@ -507,12 +511,13 @@ object VectorQueries extends QueryModule {
           .start()
         q.awaitTermination()
       } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      val out = s.read.parquet(s"$indexDir/buckets")
-        .select(col("vec_id"), col("embedding"), col("tbl"),
-          col("bucket"))
+      val postings = s.read.parquet(s"$indexDir/buckets")
+        .select(col("vec_id"), col("tbl"), col("bucket"))
         .persist()
-      out.count()
-      (out, Seq(out))
+      val vectors = corpus.persist()
+      postings.count()
+      vectors.count()
+      (LshIndex(postings, vectors), Seq(postings, vectors))
       }
     }
 
@@ -536,9 +541,9 @@ object VectorQueries extends QueryModule {
     def rows(df: DataFrame): DataFrame =
       df.select(col("vec_id"), col("tbl").cast("int").as("tbl"),
         col("bucket"))
-    val maintained = rows(streamMaintainedIndex(s, d))
+    val maintained = rows(streamMaintainedIndex(s, d).postings)
     val oneShot = rows(VectorOps.lshIndexCached(Tables.embeddings(s, d),
-      "vec_id", "embedding", dim = DIM, dir = lshIndexDir(d)))
+      "vec_id", "embedding", dim = DIM, dir = lshIndexDir(d)).postings)
     maintained.join(oneShot, keys, "left_anti")
       .select(lit("stream_only").as("side"), col("vec_id"), col("tbl"),
         col("bucket"))

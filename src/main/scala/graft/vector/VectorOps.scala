@@ -239,13 +239,6 @@ object VectorOps {
     finally prepped.unpersist(blocking = false)
   }
 
-  /** ANN top-k via multi-table LSH (the standard L-tables construction:
-    * a candidate is any vector sharing at least one table's bucket with
-    * the query — recall grows as 1−(1−pᵐ)ᴸ while each table's index
-    * stays id-bucketed). Candidates are scored once (dropDuplicates on
-    * id) and only same-bucket vectors are ever scored — at corpus scale
-    * the index shuffles (id, table, bucket) triples, never vectors.
-    */
   /** Scalar int8 quantization error analysis — the embedding
     * compression step of a corpus-scale vector pipeline (4× storage
     * cut; FAISS's SQ8 recipe): per-dimension [lo, hi] ranges over the
@@ -293,47 +286,51 @@ object VectorOps {
   }
 
   /** Multi-probe hyperplane LSH top-k (Lv et al. 2007, "Multi-Probe
-    * LSH"): besides its own bucket, the query probes every bucket
-    * within Hamming distance `probeRadius` in each table — the
-    * near-miss buckets a true neighbor most likely fell into when one
-    * or two hyperplane signs disagreed. The probe expansion lives
-    * entirely on the BROADCAST query side (tables × Σ_{i≤r} C(planes,
-    * i) rows — 296 at the 8×8×r2 defaults); the corpus side still
-    * stores exactly one bucket per table, so the index size and the
-    * scan never grow with the probe count. Measured recall@10 against
-    * brute force: exact-bucket probing 0.3 → r=1 0.5–0.6 → r=2 (the
-    * default) 0.8/0.8/0.9–1.0 at sf0.1/0.01/0.001, at unchanged index
-    * cost. At corpus scale, trade probe count against `tables` — more
-    * probes reuse the same scan; more tables re-shuffle it.
+    * LSH") over the standard L-tables construction: a candidate is any
+    * vector whose bucket in some table lies within Hamming distance
+    * `probeRadius` of the query's — the near-miss buckets a true
+    * neighbor most likely fell into when one or two hyperplane signs
+    * disagreed. The probe expansion lives entirely on the query side
+    * (tables × Σ_{i≤r} C(planes, i) pairs — 296 at the 8×8×r2
+    * defaults); the index still holds exactly one posting per vector
+    * per table, so its size never grows with the probe count. Measured
+    * recall@10 against brute force: exact-bucket probing 0.3 → r=1
+    * 0.5–0.6 → r=2 (the default) 0.8/0.8/0.9–1.0 at sf0.1/0.01/0.001.
+    * At corpus scale, trade probe count against `tables` — more probes
+    * reuse the same postings; more tables re-shuffle them.
+    *
+    * In-memory form: the postings are computed on the fly and the
+    * probe is the same [[annTopKCosineIndexed]] the persisted index
+    * answers with, so the two return the same rows.
     */
   def annTopKCosine(vectors: DataFrame, query: DataFrame,
       idCol: String, vecCol: String, k: Int, dim: Int,
       planes: Int = 8, tables: Int = 8, probeRadius: Int = 2): DataFrame =
-    annTopKCosineIndexed(lshBucketize(vectors, idCol, vecCol, dim,
-      planes, tables), query, idCol, vecCol, k, dim, planes, tables,
-      probeRadius)
+    annTopKCosineIndexed(
+      LshIndex(lshPostings(vectors, idCol, vecCol, dim, planes, tables),
+        lshCorpus(vectors, idCol, vecCol)),
+      query, idCol, vecCol, k, dim, planes, tables, probeRadius)
 
-  /** The LSH index rows: one (tbl, bucket) entry per vector per table.
-    * This is the frame [[lshIndexLoadOrBuild]] persists.
+  /** The LSH postings: one (id, tbl, bucket) row per vector per table,
+    * no vector column. This is the frame [[lshIndexLoadOrBuild]]
+    * persists.
     */
-  private def lshBucketize(vectors: DataFrame, idCol: String,
+  private def lshPostings(vectors: DataFrame, idCol: String,
       vecCol: String, dim: Int, planes: Int, tables: Int): DataFrame =
     // null embeddings excluded (the hashing UDF dereferences the array)
     vectors.filter(col(vecCol).isNotNull)
-      .select(col(idCol), col(vecCol),
+      .select(col(idCol),
         posexplode_outer(lshBuckets(col(vecCol), dim, planes, tables))
           .as(Seq("tbl", "bucket")))
       .filter(col("bucket").isNotNull)
 
-  /** Score the probed buckets of a prepared (in-memory or persisted)
-    * index. The probe set — every (tbl, bucket) within Hamming radius
-    * of the query's signatures — is collected driver-side (tables ×
-    * Σ_{i≤r} C(planes, i) pairs, 296 at the defaults; the query side
-    * was always broadcast-sized) and applied as an OR-of-ANDs FILTER:
-    * over the persisted tbl-partitioned, bucket-sorted layout that
-    * prunes partitions on `tbl` and row groups on `bucket` min/max,
-    * so a probe reads a sliver of the index instead of scanning it.
+  /** The vectors an index scores against: the caller's (id, vector)
+    * rows with a non-null vector — the same rows the postings cover.
     */
+  private def lshCorpus(vectors: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    vectors.filter(col(vecCol).isNotNull).select(col(idCol), col(vecCol))
+
   /** XOR masks for every sign-flip set of size ≤ probeRadius, built
     * driver-side (combinatorial in probeRadius, never in data). ONE
     * definition shared by the point probe and the batch probe so both
@@ -346,7 +343,19 @@ object VectorOps {
       (0 until planes).combinations(r)
         .map(_.foldLeft(0L)((a, b) => a | (1L << b))).toSeq)
 
-  def annTopKCosineIndexed(index: DataFrame, query: DataFrame,
+  /** Point probe of a prepared (in-memory or persisted) index. The
+    * probe set — every (tbl, bucket) within Hamming radius of the
+    * query's signatures — is collected driver-side (296 pairs at the
+    * defaults) and applied as an OR-of-ANDs filter on the postings:
+    * over the persisted tbl-partitioned, bucket-sorted layout that
+    * prunes partitions on `tbl` and row groups on `bucket` min/max.
+    * The surviving postings are a broadcast candidate-id set that the
+    * corpus is LEFT SEMI-joined against, so each candidate is scored
+    * once however many tables it matched in, and the vectors are read
+    * once, from the corpus, never from the index. Then score, then
+    * top k.
+    */
+  def annTopKCosineIndexed(index: LshIndex, query: DataFrame,
       idCol: String, vecCol: String, k: Int, dim: Int,
       planes: Int = 8, tables: Int = 8, probeRadius: Int = 2): DataFrame = {
     val masks = probeMasks(planes, probeRadius)
@@ -364,56 +373,61 @@ object VectorOps {
           col("bucket").isin(ps.map(_._2).toSeq.sorted: _*)
       }
       .reduceOption[Column](_ || _).getOrElse(lit(false))
-    index.filter(pred)
+    val candidates = index.postings.filter(pred).select(col(idCol))
+    index.corpus
+      .join(broadcast(candidates), Seq(idCol), "left_semi")
       .crossJoin(broadcast(query))
       .select(col(idCol),
         round(cosine(col(vecCol).cast("array<double>"),
           col("qvec").cast("array<double>")), 4).as("cos_sim"))
-      .dropDuplicates(idCol)
       .orderBy(col("cos_sim").desc, col(idCol))
       .limit(k)
   }
 
   /** BATCHED multi-query ANN over a prepared LSH index: one shared
-    * index pass serves the whole query block. The single-query probe
+    * postings pass serves the whole query block. The point probe
     * ([[annTopKCosineIndexed]]) collects its ~296 probe pairs and
     * partition/row-group-prunes the persisted layout — right when
     * queries arrive one at a time. At BATCH sizes the trade flips:
     * |queries| × 296 probe pairs stop pruning anything (every bucket
     * is probed by someone), so this path instead broadcasts the probe
-    * table — (query_id, tbl, bucket, qvec), |queries| × tables ×
+    * table — (query_id, tbl, bucket), |queries| × tables ×
     * Σ C(planes, ≤r) rows, still broadcast-sized by construction —
-    * and hash-joins it INTO one index scan. Per-(query, candidate)
-    * dedup across tables, then per-query rank ≤ k compiles to
-    * WindowGroupLimit: the exchanges carry candidates and top-k rows,
-    * never the corpus. One scan amortized over the block is the 100 TB
-    * eval shape; the pruned point probe remains the interactive one.
+    * and hash-joins it INTO one postings scan. The (query, candidate)
+    * pairs are deduplicated across tables BEFORE any vector is
+    * attached, so the dedup exchange carries two ids per pair; only
+    * then do the corpus vectors and the broadcast query vectors join
+    * in, and per-query rank ≤ k compiles to WindowGroupLimit.
     *
     * `queries`: (query_id, qvec) — one row per probe vector.
     */
-  def annTopKCosineBatch(index: DataFrame, queries: DataFrame,
+  def annTopKCosineBatch(index: LshIndex, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, dim: Int,
       planes: Int = 8, tables: Int = 8, probeRadius: Int = 2): DataFrame = {
     val masks = probeMasks(planes, probeRadius)
-    val probes = queries
-      // null query vectors carry no geometry and the hashing UDF
-      // dereferences the array — excluded, the lshBucketize convention
-      .filter(col("qvec").isNotNull)
-      .select(col("query_id"), col("qvec"),
+    // null query vectors carry no geometry and the hashing UDF
+    // dereferences the array — excluded, the lshPostings convention
+    val qvecs = queries.filter(col("qvec").isNotNull)
+      .select(col("query_id"), col("qvec"))
+    val probes = qvecs
+      .select(col("query_id"),
         posexplode_outer(lshBuckets(col("qvec"), dim, planes, tables))
           .as(Seq("tbl", "qb0")))
       .filter(col("qb0").isNotNull)
-      .select(col("query_id"), col("qvec"), col("tbl"),
+      .select(col("query_id"), col("tbl"),
         explode(array(masks.map(m =>
           col("qb0").bitwiseXOR(lit(m))): _*)).as("bucket"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id")
       .orderBy(col("cos_sim").desc, col(idCol))
-    index.join(broadcast(probes), Seq("tbl", "bucket"))
-      // Same (query, candidate) pair surfaces once per matching
-      // table/probe; every duplicate row carries identical vectors, so
-      // the arbitrary-row dedup is deterministic in value.
-      .dropDuplicates("query_id", idCol)
+    index.postings.join(broadcast(probes), Seq("tbl", "bucket"))
+      // The same (query, candidate) pair surfaces once per matching
+      // table/probe: deduplicated here, on ids alone, so each pair is
+      // scored once and no duplicate ever carries a vector.
+      .select(col("query_id"), col(idCol))
+      .distinct()
+      .join(index.corpus, Seq(idCol))
+      .join(broadcast(qvecs), Seq("query_id"))
       .select(col("query_id"), col(idCol),
         round(cosine(col(vecCol).cast("array<double>"),
           col("qvec").cast("array<double>")), 4).as("cos_sim"))
@@ -423,62 +437,76 @@ object VectorOps {
 
   private[vector] val lshMetaFile = "_graft_lsh_meta"
 
-  /** Cross-session persisted LSH index (round 11, the counterpart of
-    * [[IvfIndex.loadOrBuild]]): the bucketized corpus written
-    * partitioned by `tbl` and SORTED by `bucket` within each table —
-    * the probe's per-table bucket isin prunes partitions on tbl and
-    * parquet row groups on the bucket statistics. Hyperplanes are
-    * seed-derived ([[hyperplanes]]) so only config + corpus identity
-    * need validating: the marker carries (dim, planes, tables) and the
-    * same (count, Σ xxhash64(id)) fingerprint as the IVF index, with
-    * the same stamped-last crash semantics and the same documented
-    * blind spot (vector mutation under an unchanged id set).
+  /** The marker line naming the persisted layout. Directories written
+    * before the postings layout (vector-carrying bucket rows) lack it,
+    * so their config mismatches and they take one full rebuild.
+    */
+  private[vector] val lshLayoutLine = "layout=postings"
+
+  /** Cross-session persisted LSH index (the counterpart of
+    * [[IvfIndex.loadOrBuild]]): the POSTINGS — (id, bucket) rows, no
+    * vector column — written partitioned by `tbl` and sorted by
+    * `bucket` within each table, so the point probe's per-table bucket
+    * isin prunes partitions on tbl and parquet row groups on the bucket
+    * statistics. The vectors are not copied into the index: the
+    * returned [[LshIndex]] pairs the postings with the caller's own
+    * corpus frame (non-null vectors), which the probes read to score
+    * candidates. Hyperplanes are seed-derived ([[hyperplanes]]) so
+    * only config + corpus identity need validating: the marker carries
+    * (dim, planes, tables, layout) and the same (count, bit_xor of
+    * xxhash64(id)) fingerprint as the IVF index, with the same
+    * stamped-last crash semantics. Blind spot: a vector mutated under
+    * an unchanged id set keeps its old postings (the marker cannot see
+    * it), while scoring reads the caller's CURRENT vectors — so such a
+    * vector is ranked by its new value but found through its old
+    * buckets. Force a rebuild after such surgery.
     */
   def lshIndexLoadOrBuild(vectors: DataFrame, idCol: String,
       vecCol: String, dim: Int, dir: String,
-      planes: Int = 8, tables: Int = 8): DataFrame = {
+      planes: Int = 8, tables: Int = 8): LshIndex = {
     val spark = vectors.sparkSession
     val (n, idsum) = PersistedLayout.fingerprint(vectors, idCol, vecCol)
     val config = Seq(
       s"dim=$dim", s"planes=$planes", s"tables=$tables",
-      s"id=$idCol", s"vec=$vecCol")
+      s"id=$idCol", s"vec=$vecCol", lshLayoutLine)
     val want = (config ++ Seq(s"n=$n", s"idsum=$idsum"))
       .mkString("\n") + "\n"
-    // Incremental append (round-12, the LSH twin of
-    // [[IvfIndex.loadOrBuild]]'s): hyperplanes are seed-derived from
-    // the config alone, so appended rows bucketize into EXACTLY the
-    // rows a full rebuild would produce — the append-grown index is
-    // bit-identical to a from-scratch one, not merely equivalent. New
-    // ids are found with one id anti-join against the `tbl=0`
-    // partition (every id appears once per table, so one partition is
-    // a complete id roster at 1/tables the scan) and append-written,
-    // each batch sorted by bucket within its table so row-group
-    // pruning holds on the new files too. Deletions, config drift,
+    // Sorted by (tbl, bucket, id), not bucket alone: the dynamic-
+    // partition writer requires its input ordered by the partition
+    // column and would inject its own non-stable sort on `tbl`,
+    // scrambling the bucket order the row-group pruning relies on;
+    // with `tbl` leading, that required ordering is already satisfied
+    // and the bucket order survives into the files. The trailing id
+    // makes the files' bytes independent of shuffle arrival order.
+    def sorted(vs: DataFrame): DataFrame =
+      lshPostings(vs, idCol, vecCol, dim, planes, tables)
+        .repartition(col("tbl"))
+        .sortWithinPartitions(col("tbl"), col("bucket"), col(idCol))
+    // Incremental append (the LSH twin of [[IvfIndex.loadOrBuild]]'s):
+    // hyperplanes are seed-derived from the config alone, so appended
+    // rows bucketize into EXACTLY the postings a full rebuild would
+    // produce — the append-grown index is bit-identical to a
+    // from-scratch one, not merely equivalent. New ids are found with
+    // one id anti-join against the `tbl=0` partition (every id appears
+    // once per table, so one partition is a complete id roster at
+    // 1/tables the scan) and append-written, each batch sorted by
+    // bucket within its table so row-group pruning holds on the new
+    // files too. Deletions, config drift (an old layout included),
     // growth past [[IvfIndex.appendRefitFrac]], or any old-layout read
     // failure fall through to the full rebuild.
-    PersistedLayout.ensureWith(spark, dir, lshMetaFile, want,
+    val postings = PersistedLayout.ensureWith(spark, dir, lshMetaFile, want,
       rebuild = false) { old =>
       PersistedLayout.appendIfGrown(vectors, idCol, vecCol, old, config,
         n, IvfIndex.appendRefitFrac,
         spark.read.parquet(s"$dir/buckets")
           .filter(col("tbl") === 0).select(col(idCol))) { appended =>
-        lshBucketize(appended, idCol, vecCol, dim, planes, tables)
-          .repartition(col("tbl"))
-          .sortWithinPartitions(col("tbl"), col("bucket"))
+        sorted(appended)
           .write.mode("append")
           .partitionBy("tbl")
           .parquet(s"$dir/buckets")
       }
     } {
-      lshBucketize(vectors, idCol, vecCol, dim, planes, tables)
-        // Sorted by (tbl, bucket), not bucket alone: the dynamic-
-        // partition writer requires its input ordered by the partition
-        // column and would inject its own non-stable sort on `tbl`,
-        // scrambling the bucket order the row-group pruning relies on;
-        // with `tbl` leading, that required ordering is already
-        // satisfied and the bucket order survives into the files.
-        .repartition(col("tbl"))
-        .sortWithinPartitions(col("tbl"), col("bucket"))
+      sorted(vectors)
         .write.mode("overwrite")
         // static overwrite scoped here for the same reason as the IVF
         // rebuild: a dynamic-overwrite session would keep stale table
@@ -489,10 +517,11 @@ object VectorOps {
     } match {
       case PersistedLayout.Busy =>
         // A concurrent session is writing the layout: serve this call
-        // from the in-memory bucketize (identical rows).
-        lshBucketize(vectors, idCol, vecCol, dim, planes, tables)
+        // from the in-memory postings (identical rows).
+        lshPostings(vectors, idCol, vecCol, dim, planes, tables)
       case _ => spark.read.parquet(s"$dir/buckets")
     }
+    LshIndex(postings, lshCorpus(vectors, idCol, vecCol))
   }
 
   /** [[lshIndexLoadOrBuild]] behind the session cache, like
@@ -500,10 +529,16 @@ object VectorOps {
     * per (session, dir).
     */
   def lshIndexCached(vectors: DataFrame, idCol: String, vecCol: String,
-      dim: Int, dir: String): DataFrame =
+      dim: Int, dir: String): LshIndex =
     graft.SessionCache.getOrBuild(vectors.sparkSession,
       s"lshp|$dir|$idCol|$vecCol|dim=$dim") {
-      val ix = lshIndexLoadOrBuild(vectors, idCol, vecCol, dim, dir)
-      (ix, Nil)
+      (lshIndexLoadOrBuild(vectors, idCol, vecCol, dim, dir), Nil)
     }
 }
+
+/** An LSH index as the probes read it: `postings` holds one
+  * (id, tbl, bucket) row per vector per table and no vector column;
+  * `corpus` is the (id, vector) frame the postings were built from,
+  * non-null vectors only, where every vector lives once.
+  */
+final case class LshIndex(postings: DataFrame, corpus: DataFrame)

@@ -196,6 +196,28 @@ class GraphSpec extends AnyFunSuite {
       5L -> (Some(2L), None), 6L -> (Some(1L), None)))
   }
 
+  test("kcore fails loudly when firstDeg is not eRaw's degree frame") {
+    // Same K4 + chain graph (|E| = 8). The matching degree frame gives
+    // the unhinted labeling; a degree frame of the K4 alone (Σdg = 12,
+    // not 2·8 = 16) must be refused, not silently peeled.
+    import spark.implicits._
+    val k4 = for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b)
+    val edges = (k4 ++ Seq((4L, 5L), (5L, 6L))).toDF("u", "v")
+    def degrees(e: org.apache.spark.sql.DataFrame) =
+      e.select(col("u").as("pk")).unionByName(e.select(col("v").as("pk")))
+        .groupBy("pk").agg(count(lit(1)).as("dg"))
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.toSeq).toSeq
+    assert(labels(GraphQueries.kcoreFrame(edges, Some(degrees(edges)))) ==
+      labels(GraphQueries.kcoreFrame(edges)))
+    val planted = degrees(k4.toDF("u", "v"))
+    val err = intercept[IllegalArgumentException](
+      GraphQueries.kcoreFrame(edges, Some(planted)).collect())
+    assert(err.getMessage.contains("firstDeg") &&
+      err.getMessage.contains("12") && err.getMessage.contains("16"),
+      err.getMessage)
+  }
+
   test("clustering coefficient: exact ppm on a clique with a tail") {
     // Same K4 + 4-5, 5-6 graph: the three pure-clique vertices close
     // every wedge (cc = 1e6 exactly), the attachment vertex 4 has

@@ -157,9 +157,9 @@ class IndexAppendSpec extends AnyFunSuite {
       .toString + "/ix"
     val fresh = VectorOps.lshIndexLoadOrBuild(grown, "vec_id", "embedding",
       dim, freshDir)
-    assert(ix.count() == fresh.count())
-    assert(ix.select("vec_id", "tbl", "bucket")
-      .exceptAll(fresh.select("vec_id", "tbl", "bucket")).isEmpty,
+    assert(ix.postings.count() == fresh.postings.count())
+    assert(ix.postings.select("vec_id", "tbl", "bucket")
+      .exceptAll(fresh.postings.select("vec_id", "tbl", "bucket")).isEmpty,
       "append-grown LSH rows must be bit-identical to a fresh build's")
     // Probe equivalence with the in-memory path on the grown corpus.
     def ids(df: DataFrame): Seq[(Long, Double)] =
@@ -280,7 +280,7 @@ class IndexAppendSpec extends AnyFunSuite {
       "embedding", dim, dir)
     assert(pre.intersect(listing(dir).keySet).isEmpty,
       "deletion must rewrite the LSH buckets from scratch")
-    assert(ix.select("vec_id").distinct().count() == 300)
+    assert(ix.postings.select("vec_id").distinct().count() == 300)
     val pre2 = listing(dir).keySet
     VectorOps.lshIndexLoadOrBuild(corpus(0, 300), "vec_id", "embedding",
       dim, dir, planes = 6)

@@ -93,7 +93,7 @@ class IvfPersistSpec extends AnyFunSuite {
   test("LSH index: identical top-k, load-not-rebuild, drift, pruned probe") {
     val dir = java.nio.file.Files.createTempDirectory("lshp").toString + "/ix"
     val c = corpus(500)
-    def top(ix: DataFrame): Seq[(Long, Double)] =
+    def top(ix: LshIndex): Seq[(Long, Double)] =
       VectorOps.annTopKCosineIndexed(ix, query, "vec_id", "embedding",
         k = 5, dim = dim)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
